@@ -160,7 +160,8 @@ def with_embeddings_native(
     whole-stage-codegen projection, no Python boundary, no Arrow transfer.
     (r22 batch 8: the projection arrives via the single-parse SQL template
     above — identical tree, one parser call.)"""
-    return df.withColumn(out_col, F.expr(_embedding_sql(f"`{text_col}`", dim)))
+    quoted = text_col.replace("`", "``")
+    return df.withColumn(out_col, F.expr(_embedding_sql(f"`{quoted}`", dim)))
 
 
 def _knn_native_oracle() -> str:

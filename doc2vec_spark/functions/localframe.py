@@ -8,7 +8,8 @@ LocalRelation for an 8-row frame on local[32]. Bounded literal tails and
 broadcast LUTs go through ``local_frame`` instead: the VALUES form folds to
 one ``LocalTableScan`` and every cell round-trips exactly —
 
-- int/None cells: ``CAST(<literal> AS BIGINT/INT)``;
+- int/None cells: ``CAST(<literal> AS BIGINT/INT)``; a value outside the
+  type's range raises (the cast would give NULL or wrap);
 - double cells: ``<repr>D`` — Python repr is the shortest string that
   round-trips the IEEE value and Spark's parser rounds correctly, so the
   stored double is bit-identical (the r21 evalmetrics ``{x!r}D``
@@ -34,6 +35,8 @@ _SQL_TYPES = {
     "string": "STRING",
 }
 
+_INT_BOUND = {"BIGINT": 1 << 63, "INT": 1 << 31}
+
 
 def _cell(v, tp: str) -> str:
     if v is None:
@@ -41,6 +44,8 @@ def _cell(v, tp: str) -> str:
     if tp in ("BIGINT", "INT"):
         if isinstance(v, bool) or not isinstance(v, int):
             raise TypeError(f"{tp} cell must be int/None, got {v!r}")
+        if not -_INT_BOUND[tp] <= v < _INT_BOUND[tp]:
+            raise TypeError(f"{tp} cell out of range: {v!r}")
         return f"CAST({v} AS {tp})"
     if tp == "DOUBLE":
         if isinstance(v, bool) or not isinstance(v, (int, float)):

@@ -29,6 +29,15 @@ further commit before GC, so readers holding the previous manifest finish
 their scans (a deployment would widen that to a snapshot-isolation TTL).
 ``rebucket`` migrates a store to a new bucket count in one rewrite.
 
+Snapshot reads are job-free: the store's schema is declared
+(``STORE_SCHEMA``), never inferred, so every version directory is read with
+``spark.read.schema(...)``. Resolving a snapshot is a manifest read plus a
+driver-side file listing and launches no Spark job, and partition values
+keep their declared types (a product named ``"007"`` stays a string). The
+listing stays on the driver while no directory it walks has more entries
+than ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32 by
+default); past that, Spark lists in parallel with a job of its own.
+
 A small KV `sync_state` table mirrors vec_metadata (database.ts:121-126)
 for watermarks.
 """
@@ -43,11 +52,23 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from doc2vec_spark.chunking import CHUNK_SCHEMA
 
 EMBED_FIELD = "embedding"
 DEFAULT_NUM_BUCKETS = 16
+
+# the columns read() returns, in order
+STORE_SCHEMA = T.StructType(
+    CHUNK_SCHEMA.fields + [T.StructField(EMBED_FIELD, T.ArrayType(T.FloatType()))]
+)
+# what a version directory holds on disk: the data columns plus the
+# ``bucket`` partition column (``product_name`` is the other partition
+# column and is already in STORE_SCHEMA)
+_VERSION_SCHEMA = T.StructType(
+    STORE_SCHEMA.fields + [T.StructField("bucket", T.IntegerType())]
+)
 
 
 class ChunkStore:
@@ -111,33 +132,28 @@ class ChunkStore:
     def _bucket_expr(self, nb: int):
         return F.pmod(F.xxhash64(F.col("url")), F.lit(nb)).cast("int")
 
-    def _empty(self) -> DataFrame:
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            CHUNK_SCHEMA.fields
-            + [T.StructField(EMBED_FIELD, T.ArrayType(T.FloatType()))]
-        )
-        return self.spark.createDataFrame([], schema)
-
     def _read_buckets(self, manifest: dict, buckets: list[int]) -> DataFrame:
         # group by owning version: one scan per version dir (with basePath so
         # bucket/product_name partition columns parse), unioned by name —
-        # #versions <= num_buckets, and each scan lists only selected buckets
+        # #versions <= num_buckets, and each scan lists only selected buckets.
+        # The declared schema skips parquet schema inference (one Spark job
+        # per version dir) and partition-type inference alike.
         by_version: dict[str, list[int]] = {}
         for b in buckets:
             ver = manifest["buckets"].get(str(b))
             if ver is not None:
                 by_version.setdefault(ver, []).append(b)
         if not by_version:
-            return self._empty()
-        cols = [f.name for f in self._empty().schema.fields]
+            return self.spark.createDataFrame([], STORE_SCHEMA)
         parts = []
         for ver, bs in sorted(by_version.items()):
             base = os.path.join(self.path, ver)
             paths = [os.path.join(base, f"bucket={b}") for b in bs]
             parts.append(
-                self.spark.read.option("basePath", base).parquet(*paths).select(*cols)
+                self.spark.read.schema(_VERSION_SCHEMA)
+                .option("basePath", base)
+                .parquet(*paths)
+                .select(*STORE_SCHEMA.fieldNames())
             )
         out = parts[0]
         for p in parts[1:]:
@@ -147,6 +163,11 @@ class ChunkStore:
     # -- reads ---------------------------------------------------------------
 
     def read(self) -> DataFrame:
+        """The current committed snapshot, with columns ``STORE_SCHEMA``.
+        The schema is declared, never inferred: resolving the snapshot reads
+        the manifest and lists the live version directories on the driver,
+        and launches no Spark job (see the module docstring for the listing
+        bound)."""
         # resolve every key present in the manifest rather than range(nb):
         # during an incremental rebucket the key space is MIXED — un-migrated
         # old-layout buckets plus migrated new-layout buckets — and the two

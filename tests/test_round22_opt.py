@@ -10,6 +10,7 @@ Pins the internals that r22 optimizations / correctness fixes changed:
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -288,3 +289,73 @@ def test_embedding_sql_bitwise_equals_column_form(spark):
         return [tuple(struct.pack("<f", x) for x in r["embedding"]) for r in rows]
 
     assert bits(old) == bits(new)
+
+
+@pytest.mark.parametrize(
+    "schema, col, edge",
+    [("x long", "BIGINT", 2**63), ("x int", "INT", 2**31)],
+)
+def test_local_frame_integer_cells_are_range_checked(spark, schema, col, edge):
+    """ADVICE r22: an out-of-range integer cell raises instead of emitting a
+    cast that gives NULL or wraps; each bound itself round-trips exactly."""
+    from doc2vec_spark.functions.localframe import local_frame
+
+    lo, hi = -edge, edge - 1
+    got = local_frame(spark, [(lo,), (hi,)], schema).collect()
+    assert [r["x"] for r in got] == [lo, hi]
+    for past in (lo - 1, hi + 1):
+        with pytest.raises(TypeError, match=f"{col} cell out of range"):
+            local_frame(spark, [(past,)], schema)
+
+
+def test_native_embedding_quotes_backticked_column(spark):
+    """ADVICE r22: a text column whose name contains a backtick embeds to the
+    same vectors as ``content``; the ``content`` plan is unchanged."""
+    from pyspark.sql import functions as F
+
+    from doc2vec_spark.embedding_native import (
+        DEFAULT_DIM,
+        _embedding_sql,
+        with_embeddings_native,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "hello world"), (2, ""), (3, None)], "doc_id long, content string"
+    )
+    odd = "te`xt"
+    want = with_embeddings_native(df).orderBy("doc_id").collect()
+    got = (
+        with_embeddings_native(df.withColumnRenamed("content", odd), text_col=odd)
+        .orderBy("doc_id")
+        .collect()
+    )
+    assert [r["embedding"] for r in got] == [r["embedding"] for r in want]
+
+    def plan(frame):  # expression ids and object addresses differ per build
+        text = frame._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+|@[0-9a-f]+", "", text)
+
+    assert plan(with_embeddings_native(df)) == plan(
+        df.withColumn("embedding", F.expr(_embedding_sql("`content`", DEFAULT_DIM)))
+    )
+
+
+@pytest.mark.parametrize(
+    "module, qname",
+    [("lm", "ta_kn_bigram_score"), ("quality", "ta_pmi_collocations")],
+)
+def test_constant_key_joins_plan_broadcast_hash(spark, module, qname):
+    """ADVICE r22: the pmod(xxhash64(col), 1) constant-key joins rely on the
+    key being non-foldable so Spark plans a BroadcastHashJoin; a foldable key
+    would degrade them to a BroadcastNestedLoopJoin."""
+    import importlib
+
+    from tests.conftest import SF_DIR
+
+    df = getattr(importlib.import_module(f"doc2vec_spark.operators.{module}"), qname)(
+        spark, SF_DIR
+    )
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "BroadcastNestedLoopJoin" not in plan

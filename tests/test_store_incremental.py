@@ -377,3 +377,94 @@ def test_upsert_during_migration_commits_and_migrates_touched(spark, tmp_path):
     m = store._manifest()
     assert m["num_buckets"] == 64 and "migration" not in m
     assert {r["url"] for r in store.read().select("url").distinct().collect()} == urls
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a dedicated job group; return (result, #jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job-count probe", False)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None, False)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_read_launches_no_job(spark, tmp_path):
+    """Resolving a snapshot is driver-side listing under the declared schema:
+    read() launches no Spark job however many version directories are live,
+    so a query's job count does not grow with the live-version count."""
+    from doc2vec_spark.engine import Doc2VecSparkEngine
+    from doc2vec_spark.store import STORE_SCHEMA
+    from doc2vec_spark.sync import sync_documents
+
+    engine = Doc2VecSparkEngine(spark, str(tmp_path / "eng"))
+    store = engine.store
+    sync_documents(
+        spark,
+        store,
+        _docs(
+            spark,
+            [(f"https://d/{i}", f"# Doc {i}\n{BODY} doc {i}.", "prod", "1.0") for i in range(32)],
+        ),
+        full_listing=False,
+    )
+
+    def live():
+        return len(set(store._manifest()["buckets"].values()))
+
+    def query():
+        return engine.query_documentation("doc 5 body").collect()
+
+    assert live() == 1
+    rows_1, jobs_1 = _jobs_in_group(spark, "store_read_q1", query)
+
+    # single-url upserts into distinct buckets until 3 versions are live
+    i = 0
+    while live() < 3:
+        sync_documents(
+            spark,
+            store,
+            _docs(spark, [(f"https://d/{i}", f"# Doc {i}\n{BODY} doc {i} v2.", "prod", "1.0")]),
+            full_listing=False,
+        )
+        i += 1
+    assert live() == 3
+
+    frame, read_jobs = _jobs_in_group(spark, "store_read_only", store.read)
+    assert read_jobs == 0, f"store.read() launched {read_jobs} Spark jobs"
+    assert frame.schema == STORE_SCHEMA
+
+    rows_3, jobs_3 = _jobs_in_group(spark, "store_read_q3", query)
+    assert len(rows_1) == len(rows_3) > 0
+    assert jobs_3 == jobs_1, f"query jobs grew with live versions: {jobs_1} -> {jobs_3}"
+
+
+def test_numeric_looking_product_name_round_trips_as_string(spark, tmp_path):
+    """product_name is a partition column: with an inferred partition type a
+    store whose only product is "007" read back IntegerType 7, so lookups
+    returned 7. The declared type keeps "007", and a re-sync still matches
+    every stored url."""
+    from pyspark.sql import types as T
+
+    from doc2vec_spark.query import get_chunks
+    from doc2vec_spark.store import ChunkStore
+    from doc2vec_spark.sync import sync_documents
+
+    store = ChunkStore(spark, str(tmp_path / "chunks"))
+    docs = _docs(
+        spark,
+        [(f"https://d/{i}", f"# Doc {i}\n{BODY} doc {i}.", "007", "1.0") for i in range(8)],
+    )
+    sync_documents(spark, store, docs)
+    stored = store.read()
+    assert isinstance(stored.schema["product_name"].dataType, T.StringType)
+    rows = get_chunks(stored, "https://d/3").collect()
+    assert rows and {r["product_name"] for r in rows} == {"007"}
+
+    token = store.version_token()
+    counters = sync_documents(spark, store, docs)
+    assert counters.items_unchanged == 8, counters
+    assert counters.items_new == counters.items_updated == counters.items_deleted == 0
+    assert counters.chunks_added == counters.chunks_deleted == 0, counters
+    assert store.version_token() == token
