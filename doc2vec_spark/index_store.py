@@ -45,21 +45,14 @@ import json
 from pyspark.sql import DataFrame
 
 from doc2vec_spark.store import ChunkStore, SyncStateStore
+from doc2vec_spark.train_cache import (
+    decode_centroids,
+    decode_codebooks,
+    finite_components,
+)
 
 INDEX_KEY = "ann_index"
 PQ_KEY = "ann_pq_codebooks"
-
-# cell ids are packed into the assignment fold as (d6 * 100 + cell) % 100
-# (serving.cell_assignment_col / _d6_int callers), so any id outside
-# [0, CELL_ID_CAP) would silently COLLIDE with another cell after the mod —
-# a persisted payload carrying one must read as absent, never load.
-# r17: canonical home is train_cache.py — ONE validation discipline for
-# both persistence planes (ADVICE r16 #2); re-exported here for callers.
-from doc2vec_spark.train_cache import (
-    CELL_ID_CAP,
-    cell_id,
-    finite_components as _finite_floats,
-)
 
 
 def _token_str(version_token: tuple) -> str:
@@ -80,42 +73,29 @@ class AnnIndexStore:
         }
         self.kv.put(INDEX_KEY, json.dumps(payload))
 
-    def load(self, version_token: tuple) -> dict[int, list[float]] | None:
-        """The persisted index, or None when absent or trained on a
-        different committed version of the chunk data (stale-by-commit)."""
-        raw = self.kv.get(INDEX_KEY)
-        if raw is None:
-            return None
+    def _load(self, kv_key: str, field: str, version_token: tuple):
+        """The raw ``field`` of the entry trained on this committed version,
+        else None; a non-JSON or non-object payload reads as absent. The
+        caller decodes the field with the train_cache decoder for its
+        shape."""
+        raw = self.kv.get(kv_key)
         try:
-            payload = json.loads(raw)
+            payload = None if raw is None else json.loads(raw)
         except ValueError:
             return None
-        # corrupt-reads-as-absent covers the whole payload shape, not just
-        # invalid JSON (review r14): a non-object payload or a missing/
-        # non-object centroids map must read as absent, never raise
         if not isinstance(payload, dict):
             return None
         if payload.get("version") != _token_str(version_token):
             return None
-        cents = payload.get("centroids")
-        if not isinstance(cents, dict):
-            return None
-        out: dict[int, list[float]] = {}
-        for c, v in cents.items():
-            # key + value validation through the SHARED validators (ADVICE
-            # r14/r16): bare int(c) accepted ' 7'/'+7'/'7_0' (the last one
-            # silently as cell 70) and unicode digits; cell_id rejects all
-            # of them, so both persistence planes apply one key discipline
-            cell = cell_id(c)
-            vec = _finite_floats(v)
-            if cell is None or vec is None:
-                return None
-            out[cell] = vec
-        # cardinality: keys that alias one cell id would silently drop a
-        # centroid — read the whole payload as absent instead
-        if len(out) != len(cents):
-            return None
-        return out or None
+        return payload.get(field)
+
+    def load(self, version_token: tuple) -> dict[int, list[float]] | None:
+        """The persisted index, or None when absent, value-corrupt or
+        trained on a different committed version of the chunk data
+        (stale-by-commit)."""
+        return decode_centroids(
+            self._load(INDEX_KEY, "centroids", version_token), finite_components
+        )
 
     def save_pq(
         self, codebooks: list[list[list[float]]], version_token: tuple
@@ -135,32 +115,7 @@ class AnnIndexStore:
     def load_pq(self, version_token: tuple) -> list[list[list[float]]] | None:
         """The persisted PQ codebooks, or None when absent, stale-by-commit,
         or value-corrupt (same corrupt-reads-as-absent contract as load)."""
-        raw = self.kv.get(PQ_KEY)
-        if raw is None:
-            return None
-        try:
-            payload = json.loads(raw)
-        except ValueError:
-            return None
-        if not isinstance(payload, dict):
-            return None
-        if payload.get("version") != _token_str(version_token):
-            return None
-        cbs = payload.get("codebooks")
-        if not isinstance(cbs, list) or not cbs:
-            return None
-        out: list[list[list[float]]] = []
-        for m_ in cbs:
-            if not isinstance(m_, list) or not m_:
-                return None
-            words = []
-            for w in m_:
-                vec = _finite_floats(w)
-                if vec is None:
-                    return None
-                words.append(vec)
-            out.append(words)
-        return out
+        return decode_codebooks(self._load(PQ_KEY, "codebooks", version_token))
 
     def invalidate(self) -> None:
         self.kv.delete(INDEX_KEY)

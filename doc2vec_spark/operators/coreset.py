@@ -48,6 +48,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doc2vec_spark import train_cache
 from doc2vec_spark.spec import QuerySpec
 from doc2vec_spark.tables import load
 
@@ -104,19 +105,10 @@ def embeddings_with_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Selected-centers memo (the kmeans _TRAIN_MEMO discipline): a production
-# coreset build SELECTS once and every audit/consumer reuses the k centers;
-# pipe_coreset_fps / pipe_coreset_coverage / kmeans seeding each re-paid
-# the k driver-paced rounds without it. Selection is deterministic, the
-# state is k bounded tuples, and the key carries the dataset fingerprint
-# so a rewrite under the same path re-selects. Only the default corpus
-# path memoizes — explicit `e` frames (kmeans' training sample) bypass it.
-_FPS_MEMO: dict[tuple, list] = {}
-
-
 def dataset_fingerprint(sf_dir: str, table: str = "embeddings") -> tuple:
     """Per-FILE (relpath, mtime_ns, size) fold of the table's parquet —
-    the memo-invalidation key; () for non-local/unreadable paths.
+    the data identity in every train_cache key; () for non-local/unreadable
+    paths.
 
     Recurses like measurement.corpus_parquet_bytes (VERDICT r20 #1, fixed
     r22): for a NESTED directory layout (store.py's partitionBy shape) the
@@ -167,17 +159,20 @@ def fps_select(
     ASC). One map-only job per round; assumes the source holds >= k rows
     (every driver SF does). ``e`` overrides the source frame (kmeans.py
     passes its bounded training sample) — it must carry (vec_id, v, nv).
-    The default corpus path memoizes per (sf_dir, fingerprint, k); an
-    empty fingerprint (non-local path / unknown layout) bypasses the memo
-    entirely so unknown-provenance data always re-selects (ADVICE r12)."""
+    A production coreset build selects once and every consumer reuses the
+    k centers, so the default corpus path is cached in memory
+    (train_cache) per (sf_dir, fingerprint, k); an ``e`` frame or an empty
+    fingerprint bypasses the cache."""
+    fp = dataset_fingerprint(sf_dir) if e is None else ()
+    return train_cache.cached(
+        "fps", (sf_dir, fp, k) if fp else None, lambda: _fps(spark, sf_dir, k, e)
+    )
+
+
+def _fps(
+    spark: SparkSession, sf_dir: str, k: int, e: DataFrame | None
+) -> list[tuple[int, int, int | None, list[float]]]:
     own = e is None
-    fp = dataset_fingerprint(sf_dir) if own else None
-    key = (sf_dir, fp, k) if own and fp else None
-    if key is not None and key in _FPS_MEMO:
-        # DEEP copy: element 3 is a mutable vector list — a shallow tuple
-        # copy would hand every caller the memo's own list objects
-        # (round-13 review finding on the ADVICE r12 fix)
-        return [(r, vid, d, list(vec)) for r, vid, d, vec in _FPS_MEMO[key]]
     if own:
         e = embeddings_with_norms(spark, sf_dir).cache()
     try:
@@ -207,11 +202,6 @@ def fps_select(
                 break
             pick = picked[0]
             selected.append((rank, pick["vec_id"], pick["d6"], list(pick["v"])))
-        if key is not None:
-            # store a DEEP copy (vectors included) so a caller mutating the
-            # returned list — or its vector lists — can never corrupt later
-            # cache hits (ADVICE r12 + round-13 review)
-            _FPS_MEMO[key] = [(r, vid, d, list(vec)) for r, vid, d, vec in selected]
         return selected
     finally:
         if own:

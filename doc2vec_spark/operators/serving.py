@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doc2vec_spark import train_cache
 from doc2vec_spark.functions.rounding import pround
 from doc2vec_spark.functions.vectors import cosine_distance_lit, lit_vector
 from doc2vec_spark.operators.coreset import (
@@ -379,12 +380,6 @@ def cell_assignment_col(index: dict[int, list[float]]):
     return (o % 100).cast("long")
 
 
-# in-session trained-quantizer memo for the serving API: {plan semantic
-# hash: index}. Bounded (one entry per distinct serving frame); hits
-# return per-call copies so callers can't mutate shared centroid lists.
-_INDEX_MEMO: dict[int, dict[int, list[float]]] = {}
-
-
 def query_documentation_routed(
     chunks: DataFrame,
     query_text: str,
@@ -408,7 +403,7 @@ def query_documentation_routed(
     mcp/src/server.ts:134-135). ``corpus_size`` short-circuits the routing
     count for deployments that know their cardinality.
 
-    "Train once in-session" is made true by _INDEX_MEMO below, keyed on
+    "Train once in-session" is made true by train_cache's memo, keyed on
     the chunk frame's analyzed-plan semantic hash: repeated calls over the
     same frame (the serving loop) reuse the trained quantizer instead of
     re-paying the Lloyd loop per query (round-13 review finding). The key
@@ -437,10 +432,10 @@ def query_documentation_routed(
     if index is None:
         n = corpus_size if corpus_size is not None else chunks.count()
         if n > thresh:
-            key = int(chunks._jdf.queryExecution().analyzed().semanticHash())
-            if key not in _INDEX_MEMO:
-                _INDEX_MEMO[key] = build_chunk_ann_index(chunks)
-            index = {c: list(v) for c, v in _INDEX_MEMO[key].items()} or None
+            key = (int(chunks._jdf.queryExecution().analyzed().semanticHash()),)
+            index = train_cache.cached(
+                "index", key, lambda: build_chunk_ann_index(chunks)
+            ) or None
     if index is not None:
         qvec = [float(x) for x in embed_text(query_text, d)]
         probed = _nearest_cells(index, qvec, nprobe)
@@ -484,52 +479,32 @@ def train_pq_codebooks(
     _lloyd_ctes quotient. All distances are exact int64 arithmetic
     (micro-unit diffs <= ~1e6, squared 8-dim sums <= ~8e12 — far inside
     int64), so the vectorized numpy path is bitwise the oracle's BIGINT
-    CTEs. Memoized per (sf_dir, dataset fingerprint, iters) like
-    _TRAIN_MEMO — training is deterministic, and without the memo every
-    bench rep re-paid the Lloyd loop (measured +1.2 s/rep); frames bypass
-    the memo (no fingerprintable provenance)."""
+    CTEs. Cached (train_cache, both tiers) per (sf_dir, dataset
+    fingerprint, M, K, iters) like train_kmeans — without it every bench
+    rep re-paid the Lloyd loop (measured +1.2 s/rep); frames bypass the
+    cache (no fingerprintable provenance)."""
+    from doc2vec_spark.operators.coreset import dataset_fingerprint
+    from doc2vec_spark.operators.similarity import PQ_K, PQ_M
+
+    fp = dataset_fingerprint(sf_dir) if frame is None else ()
+    return train_cache.cached(
+        "pq",
+        (sf_dir, fp, PQ_M, PQ_K, PQ_TRAIN_ITERS) if fp else None,
+        lambda: _train_pq(spark, sf_dir, frame),
+        train_cache.decode_codebooks,
+    )
+
+
+def _train_pq(
+    spark: SparkSession, sf_dir: str, frame: DataFrame | None
+) -> list[list[list[float]]]:
     import hashlib
     import math
 
     import numpy as np
 
-    from doc2vec_spark.operators.coreset import dataset_fingerprint
     from doc2vec_spark.operators.kmeans import _sample_e
     from doc2vec_spark.operators.similarity import PQ_K, PQ_M, PQ_SUB
-
-    own = frame is None
-    fp_key = dataset_fingerprint(sf_dir) if own else None
-    key = (sf_dir, fp_key, PQ_M, PQ_K, PQ_TRAIN_ITERS) if own and fp_key else None
-    if key is not None and key in _PQ_TRAIN_MEMO:
-        # deep copy: callers may mutate the nested lists (the FPS-memo lesson)
-        return [[list(w) for w in m_] for m_ in _PQ_TRAIN_MEMO[key]]
-    # cross-session disk tier (train_cache.py, the kmeans.py discipline):
-    # fingerprint + spec-digest keyed, so a fresh session serves trained-PQ
-    # without re-paying the per-subspace Lloyd loop (BENCH_r15's 8.6 s stall)
-    if key is not None:
-        from doc2vec_spark import train_cache
-
-        disk_key = key + (train_cache.module_digest(__name__),)
-        hit = train_cache.get("pq", disk_key)
-        if isinstance(hit, list) and hit:
-            # value-corrupt entries read as absent -> retrain (kmeans.py's
-            # disk-hit contract). r17: train_cache.finite_components
-            # (ADVICE r16 #2) — the old bare float() accepted numeric
-            # strings and non-finite values (JSON Infinity survives
-            # round-trip), serving a corrupt codebook instead of retraining.
-            cbs = []
-            for m_ in hit:
-                if not isinstance(m_, list) or not m_:
-                    cbs = None
-                    break
-                ws = [train_cache.finite_components(w) for w in m_]
-                if any(w is None for w in ws):
-                    cbs = None
-                    break
-                cbs.append(ws)
-            if cbs:
-                _PQ_TRAIN_MEMO[key] = [[list(w) for w in m_] for m_ in cbs]
-                return cbs
 
     rows = _sample_e(spark, sf_dir, frame).select("vec_id", "v").collect()
     rows.sort(
@@ -564,22 +539,7 @@ def train_pq_codebooks(
                         int(math.floor(int(t) / cnt)) for t in sums
                     ]
         cw = new_cw
-    out = [[[float(c) / PQ_FP for c in w] for w in cw[m]] for m in range(PQ_M)]
-    if key is not None:
-        _PQ_TRAIN_MEMO[key] = [[list(w) for w in m_] for m_ in out]
-        from doc2vec_spark import train_cache
-
-        train_cache.put(
-            "pq",
-            key + (train_cache.module_digest(__name__),),
-            [[list(w) for w in m_] for m_ in out],
-        )
-    return out
-
-
-# trained-codebook memo (the _TRAIN_MEMO discipline): bounded driver state,
-# keyed on the dataset fingerprint so rewrites retrain
-_PQ_TRAIN_MEMO: dict[tuple, list[list[list[float]]]] = {}
+    return [[[float(c) / PQ_FP for c in w] for w in cw[m]] for m in range(PQ_M)]
 
 
 def _pq_train_ctes() -> str:

@@ -180,11 +180,12 @@ def tpch_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
     ORDER BY s_suppkey
     """,
-    "TPC-H Q15 top supplier: per-supplier revenue (one keyed shuffle), the "
-    "global max fetched by a separate bounded .first() job (per-supplier "
-    "partials only) and re-entered as a literal — the returned plan carries "
-    "no single-partition exchange. Equality on the cent-snapped revenue is "
-    "exact, so ties surface identically on both engines.",
+    "TPC-H Q15 top supplier: per-supplier revenue (one keyed shuffle, "
+    "scoped-cached), its global max as a 1-row broadcast frame, and a "
+    "broadcast hash join of the two on integer cents "
+    "CAST(round(revenue * 100) AS BIGINT): one fact pass, one action. The "
+    "revenue is cent-snapped, so ties surface identically on both engines, "
+    "and an ulp-level recompute difference cannot drop the top supplier.",
 )
 def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(
@@ -193,21 +194,23 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = load(spark, sf_dir, "supplier")
     from doc2vec_spark.caching import scoped_cache
 
-    # r22 batch 6 (guide §1.2/§2.4): the `.first()` max probe paid the full
-    # per-supplier revenue aggregation, then the returned plan re-ran the
-    # same fact scan + suppkey shuffle — TWO lineitem passes. The bounded
-    # per-supplier table is now scoped-cached and the global max re-enters
-    # as a 1-row broadcast frame equi-joined on the cent-snapped revenue
-    # itself (exact-double equality, the same comparison the filter made;
-    # a NULL max from an empty window joins nothing, matching the old
-    # `== lit(None)` filter). One fact pass, one action.
+    # The bounded per-supplier table is scoped-cached so the max and the
+    # join read one fact pass. The max re-enters as a 1-row broadcast frame
+    # joined on integer cents, not exact doubles: if cached blocks are
+    # evicted mid-action, each side recomputes the float sum in its own
+    # partial order, and an ulp apart the top supplier would silently drop.
+    # A NULL max from an empty window joins nothing.
     rev = scoped_cache(
         li.groupBy(F.col("l_suppkey").alias("suppkey"))
         .agg(pround(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("total_revenue"))
     )
     mx = rev.agg(F.max("total_revenue").alias("m"))
+
+    def cents(c):
+        return F.round(F.col(c) * 100).cast("long")
+
     return (
-        rev.join(F.broadcast(mx), F.col("total_revenue") == F.col("m"))
+        rev.join(F.broadcast(mx), cents("total_revenue") == cents("m"))
         .join(F.broadcast(supplier), F.col("suppkey") == supplier.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
         .orderBy("s_suppkey")

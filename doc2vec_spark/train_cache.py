@@ -1,62 +1,55 @@
-"""Cross-session disk tier for the deterministic trained-quantizer memos
-(VERDICT r15 #3: BENCH_r15 recorded an 8.6 s first-rep stall on
-ann_ivf_pq_search_trained because every fresh session re-paid coarse +
-PQ training).
+"""The one cache of trained artifacts (k-means centroids, PQ codebooks, FPS
+centers, the serving tier's plan-keyed IVF index). Every trainer goes
+through ``cached(kind, key, train, decode)``; no other module keeps a memo
+of trained state.
 
-The in-process memos in operators/kmeans.py (_TRAIN_MEMO) and
-operators/serving.py (_PQ_TRAIN_MEMO) already make training
-once-per-session; this module makes it once-per-DATASET-per-ALGORITHM
-across sessions, the way a deployment persists its trained index between
-syncs (the reference stores the whole index structure in the store,
-database.ts:36-52 — index_store.py is the ChunkStore-plane sibling of
-this file, keyed by commit version; registry queries have no ChunkStore,
-so their key is the dataset fingerprint).
+Key. ``key`` is the artifact's data identity plus the parameters that shape
+it: (sf_dir, operators/coreset.dataset_fingerprint, K, iters, ...) for the
+registry trainers, (analyzed-plan semantic hash,) for the serving index.
+On disk the key also carries ``module_digest(train.__module__)``: the spec
+digest of the trainer's module closure folded with the universal-module
+stamp, so a code edit that could change the artifact retrains. The data
+identity covers a same-path rewrite (the fingerprint folds every part
+file's mtime and size, recursively), so neither tier can serve an artifact
+of old data or old code.
 
-Staleness has exactly two sources, and the key carries both:
+Bypasses. ``key is None`` means unknown provenance: a caller-supplied
+``frame=`` has no fingerprintable derivation and an empty fingerprint means
+an unreadable or non-local path. Such calls run ``train()`` every time and
+store nothing. An empty artifact (empty source) is returned but never
+stored: there is nothing to reuse.
 
-- the DATA changed: the memo key already embeds the dataset fingerprint
-  (mtime+size — operators/coreset.dataset_fingerprint), so a rewritten
-  parquet never hits.
-- the ALGORITHM changed: the key embeds the trainer module's spec digest
-  (spec_hashes._closure_digests — the comment-stripped token stream of
-  the module and its transitive first-party imports), so any code edit
-  that could change the trained artifact retrains. This is the guard an
-  in-process memo gets for free and a disk tier must add explicitly.
+Tiers. (1) An in-process memo, one dict behind a ``threading.Lock``; the
+lock guards only the dict, never ``train()``, so two threads missing on
+one key may both train, and both store the same bits (training is
+deterministic: md5-ordered bounded sample, integer fixed-point
+arithmetic). Values are deep-copied on store and on hit, so no caller can
+mutate what another one gets. (2) The cross-session disk tier, used only
+when a ``decode`` is given (k-means ``"km"`` and PQ ``"pq"``; FPS and the
+plan-hash index stay memo-only): one JSON file per entry under
+<repo>/.train_cache/ (``SPARK_GRAFT_TRAIN_CACHE`` overrides the path, an
+empty value disables the tier). A put is an independent tmp-file +
+``os.replace``, so concurrent writers never lose each other's entries;
+each file records its full logical key, verified on read, so a hash-prefix
+collision reads as absent; eviction unlinks the oldest-mtime files beyond
+MAX_ENTRIES. JSON float round-trips are exact (repr-based), so a disk hit
+is bitwise the retrain result. Unreadable, corrupt or mismatched entries
+read as absent and writes never raise into the query path.
 
-Training is deterministic (md5-ordered bounded sample, integer fixed-point
-arithmetic), so a hit is bitwise the retrain result. JSON float round-trips
-are exact (repr-based). Corrupt or unreadable cache reads as absent; writes
-are atomic-replace (tmp + os.replace) and never raise into the query path.
-
-Layout (r17, VERDICT r16 #4): ONE FILE PER ENTRY under
-<repo>/.train_cache/ — the r16 single-JSON layout did read-merge-write of
-the whole store, so two concurrent writers could silently drop each
-other's entry (lost update, never corruption; a miss only costs a
-retrain). Per-entry files make every put an independent atomic
-os.replace: concurrent writers of different keys never interact, and
-same-key writers race only between bitwise-identical payloads (training
-is deterministic). Each file records its full logical key and is
-verified on read, so a hash-prefix collision reads as absent rather than
-serving the wrong artifact. Eviction unlinks oldest-mtime files beyond
-MAX_ENTRIES and swallows the already-deleted race. The directory is
-gitignored (host-local artifact, not a deliverable);
-SPARK_GRAFT_TRAIN_CACHE overrides the path, empty value disables the
-tier entirely.
-
-This module also owns the shared VALUE validators for disk-tier hit paths
-(ADVICE r16 #1/#2): the r16 consumers coerced with bare int()/float(),
-which accepted numeric strings, bools, and JSON ``Infinity`` (whose int()
-raises OverflowError — a corrupt entry crashed the query path the
-contract says must fall through to retrain). index_store.py reuses
-``finite_components``/``CELL_ID_CAP`` so both persistence planes enforce
-one discipline.
+Decoders. A persisted payload is outside input: one decoder per shape,
+``decode_centroids`` ({cell: components}) and ``decode_codebooks``
+([m][j][sub] floats), turns it into the artifact or None (read as absent,
+retrain). index_store.AnnIndexStore's commit-token plane uses the same
+two, so both persistence planes enforce one value discipline.
 """
 
 from __future__ import annotations
 
+import copy
 import hashlib
 import json
 import os
+import threading
 from functools import lru_cache
 from pathlib import Path
 
@@ -68,7 +61,6 @@ MAX_ENTRIES = 32  # bounded: oldest-mtime evicted first
 # (serving.cell_assignment_col / _d6_int callers), so any id outside
 # [0, CELL_ID_CAP) would silently COLLIDE with another cell after the mod —
 # a persisted payload carrying one must read as absent, never load.
-# index_store.py imports this constant (single source of truth).
 CELL_ID_CAP = 100
 
 
@@ -128,6 +120,68 @@ def cell_id(c) -> int | None:
     if not isinstance(c, int) or not (0 <= c < CELL_ID_CAP):
         return None
     return c
+
+
+_MEMO: dict[tuple, object] = {}
+_LOCK = threading.Lock()
+
+
+def cached(kind: str, key: tuple | None, train, decode=None):
+    """``train()``'s artifact for (kind, key), from the memo, else from the
+    disk tier (when ``decode`` is given), else trained and stored in both.
+    See the module docstring for the key, bypass and copy contract."""
+    if key is None:
+        return train()
+    with _LOCK:
+        if (kind, key) in _MEMO:
+            return copy.deepcopy(_MEMO[(kind, key)])
+    disk_key = None if decode is None else key + (module_digest(train.__module__),)
+    value = None if disk_key is None else decode(get(kind, disk_key))
+    if value is None:
+        value = train()
+        if value and disk_key is not None:
+            put(kind, disk_key, value)
+    if value:
+        with _LOCK:
+            _MEMO[(kind, key)] = copy.deepcopy(value)
+    return value
+
+
+def clear() -> None:
+    """Drop every in-process entry (the disk tier is untouched)."""
+    with _LOCK:
+        _MEMO.clear()
+
+
+def decode_centroids(payload, component) -> dict[int, list] | None:
+    """{cell: vector} from a JSON object payload, or None. ``component`` is
+    the per-vector validator: integer_components for the k-means
+    fixed-point payload, finite_components for float centroids."""
+    if not isinstance(payload, dict) or not payload:
+        return None
+    out = {}
+    for c, v in payload.items():
+        cell, vec = cell_id(c), component(v)
+        if cell is None or vec is None:
+            return None
+        out[cell] = vec
+    # keys that alias one cell id ("7", "07") would silently drop a centroid
+    return out if len(out) == len(payload) else None
+
+
+def decode_codebooks(payload) -> list[list[list[float]]] | None:
+    """[m][j][sub] finite floats from a JSON list payload, or None."""
+    if not isinstance(payload, list) or not payload:
+        return None
+    out = []
+    for m_ in payload:
+        if not isinstance(m_, list) or not m_:
+            return None
+        words = [finite_components(w) for w in m_]
+        if any(w is None for w in words):
+            return None
+        out.append(words)
+    return out
 
 
 def _cache_dir() -> Path | None:

@@ -67,24 +67,26 @@ def test_fps_memo_bypassed_on_unknown_fingerprint(spark, monkeypatch):
     """ADVICE r12: fingerprint () (non-local path / unknown layout) must skip
     the memo entirely — no lookup, no store — so a data rewrite under an
     unfingerprintable path always re-selects."""
+    from doc2vec_spark import train_cache
     from doc2vec_spark.operators import coreset
 
     monkeypatch.setattr(coreset, "dataset_fingerprint", lambda *a, **k: ())
-    before = dict(coreset._FPS_MEMO)
+    before = dict(train_cache._MEMO)
     out = coreset.fps_select(spark, SF_DIR, k=2)
     assert len(out) == 2
-    assert coreset._FPS_MEMO == before  # nothing stored under a () key
+    assert train_cache._MEMO == before  # nothing stored under a () key
 
 
 def test_kmeans_memo_bypassed_on_unknown_fingerprint(spark, monkeypatch):
     """Same bypass for the kmeans trainer's memo (shares the finding)."""
+    from doc2vec_spark import train_cache
     from doc2vec_spark.operators import kmeans
 
     monkeypatch.setattr(kmeans, "dataset_fingerprint", lambda *a, **k: ())
-    before = dict(kmeans._TRAIN_MEMO)
+    before = dict(train_cache._MEMO)
     cents = kmeans.train_kmeans(spark, SF_DIR)
     assert len(cents) == kmeans.KM_K
-    assert kmeans._TRAIN_MEMO == before
+    assert train_cache._MEMO == before
 
 
 # ---------------------------------------------------------------------------
@@ -752,6 +754,7 @@ def test_routed_api_trains_once_per_frame(spark, monkeypatch):
     """Review finding: without an explicit index, repeated serving calls
     over the same frame must reuse the trained quantizer (one build), not
     retrain per query."""
+    from doc2vec_spark import train_cache
     from doc2vec_spark.chunking import chunk_documents
     from doc2vec_spark.embedding import with_embeddings
     from doc2vec_spark.operators import serving
@@ -761,7 +764,7 @@ def test_routed_api_trains_once_per_frame(spark, monkeypatch):
         "url string, markdown string, product_name string, version string",
     )
     chunks = with_embeddings(chunk_documents(docs)).cache()
-    serving._INDEX_MEMO.clear()
+    train_cache.clear()
     calls = {"n": 0}
     real = serving.build_chunk_ann_index
 
@@ -773,7 +776,7 @@ def test_routed_api_trains_once_per_frame(spark, monkeypatch):
     serving.query_documentation_routed(chunks, "q1", ann_threshold=0, k=2).collect()
     serving.query_documentation_routed(chunks, "q2 q3", ann_threshold=0, k=2).collect()
     assert calls["n"] == 1
-    serving._INDEX_MEMO.clear()
+    train_cache.clear()
     chunks.unpersist()
 
 

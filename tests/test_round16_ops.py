@@ -267,8 +267,7 @@ def test_trained_quantizers_served_from_disk_in_fresh_process_state(
     from doc2vec_spark.operators import serving as sv
 
     monkeypatch.setenv(train_cache.CACHE_ENV, str(tmp_path / "tc.json"))
-    monkeypatch.setattr(km, "_TRAIN_MEMO", {})
-    monkeypatch.setattr(sv, "_PQ_TRAIN_MEMO", {})
+    train_cache.clear()
     cents1 = km.train_kmeans(spark, SF_DIR)
     cbs1 = sv.train_pq_codebooks(spark, SF_DIR)
     assert cents1 and cbs1
@@ -276,17 +275,18 @@ def test_trained_quantizers_served_from_disk_in_fresh_process_state(
     def _no_sample(*a, **k):
         raise AssertionError("retrained despite a current disk-tier entry")
 
-    monkeypatch.setattr(km, "_TRAIN_MEMO", {})
-    monkeypatch.setattr(sv, "_PQ_TRAIN_MEMO", {})
+    train_cache.clear()
     monkeypatch.setattr(km, "_sample_e", _no_sample)
     assert km.train_kmeans(spark, SF_DIR) == cents1
     assert sv.train_pq_codebooks(spark, SF_DIR) == cbs1
 
 
-def test_disk_tier_key_carries_the_spec_digest(tmp_path, monkeypatch):
-    """An algorithm edit (different module digest) must MISS — a stale
-    trained artifact served across a code change would silently diverge
-    from the oracle."""
+def test_disk_tier_key_carries_the_spec_digest(spark, tmp_path, monkeypatch):
+    """Both staleness sources must MISS: an algorithm edit (different
+    module digest) on disk, and a same-path rewrite of the data in the
+    same process (the key's dataset fingerprint moves). A stale trained
+    artifact served across either would silently diverge from the
+    oracle."""
     from doc2vec_spark import train_cache
 
     monkeypatch.setenv(train_cache.CACHE_ENV, str(tmp_path / "tc.json"))
@@ -305,6 +305,27 @@ def test_disk_tier_key_carries_the_spec_digest(tmp_path, monkeypatch):
     # still universal-stamped)
     assert train_cache.module_digest("not.a.module").startswith("not.a.module:")
 
+    # end to end through train_kmeans on a private copy of the table, with
+    # the part file one level down (the store's directory layout)
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from doc2vec_spark.operators import kmeans as km
+
+    sf = tmp_path / "sf"
+    part = sf / "embeddings.parquet" / "part-0.parquet"
+    part.parent.mkdir(parents=True)
+    shutil.copy(f"{SF_DIR}/embeddings.parquet", part)
+    trained = []
+    real = km._lloyd
+    monkeypatch.setattr(km, "_lloyd", lambda *a: trained.append(1) or real(*a))
+    first = km.train_kmeans(spark, str(sf))
+    assert km.train_kmeans(spark, str(sf)) == first and len(trained) == 1
+    pq.write_table(pq.read_table(part).slice(1), part)  # in place, same path
+    km.train_kmeans(spark, str(sf))
+    assert len(trained) == 2  # the memo missed: retrained on the new data
+
 
 def test_value_corrupt_disk_entries_fall_through_to_retrain(
     spark, tmp_path, monkeypatch
@@ -317,8 +338,7 @@ def test_value_corrupt_disk_entries_fall_through_to_retrain(
     from doc2vec_spark.operators import serving as sv
 
     monkeypatch.setenv(train_cache.CACHE_ENV, str(tmp_path / "tc.json"))
-    monkeypatch.setattr(km, "_TRAIN_MEMO", {})
-    monkeypatch.setattr(sv, "_PQ_TRAIN_MEMO", {})
+    train_cache.clear()
     kd = train_cache.module_digest("doc2vec_spark.operators.kmeans")
     sd = train_cache.module_digest("doc2vec_spark.operators.serving")
     from doc2vec_spark.operators.coreset import dataset_fingerprint
@@ -332,12 +352,12 @@ def test_value_corrupt_disk_entries_fall_through_to_retrain(
         train_cache.put("km", km_key, bad)
         cents = km.train_kmeans(spark, SF_DIR)  # retrains, no crash
         assert cents and all(isinstance(v[0], int) for v in cents.values())
-        monkeypatch.setattr(km, "_TRAIN_MEMO", {})
+        train_cache.clear()
     for bad in ("abc", [[]], [["ab"]], [[[1, "x"]]], [5]):
         train_cache.put("pq", pq_key, bad)
         cbs = sv.train_pq_codebooks(spark, SF_DIR)  # retrains, no crash
         assert cbs and isinstance(cbs[0][0][0], float)
-        monkeypatch.setattr(sv, "_PQ_TRAIN_MEMO", {})
+        train_cache.clear()
 
 
 # ---------------------------------------------------------------------------

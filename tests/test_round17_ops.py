@@ -208,7 +208,7 @@ def test_kmeans_hit_survives_infinity_payload(spark, tmp_path, monkeypatch):
     from doc2vec_spark.operators.coreset import dataset_fingerprint
 
     monkeypatch.setenv(train_cache.CACHE_ENV, str(tmp_path / "tc"))
-    monkeypatch.setattr(km, "_TRAIN_MEMO", {})
+    train_cache.clear()
     kd = train_cache.module_digest("doc2vec_spark.operators.kmeans")
     from tests.conftest import SF_DIR
 
@@ -223,16 +223,53 @@ def test_kmeans_hit_survives_infinity_payload(spark, tmp_path, monkeypatch):
         train_cache.put("km", key, bad)
         cents = km.train_kmeans(spark, SF_DIR)  # retrains, no crash
         assert cents and all(isinstance(v[0], int) for v in cents.values())
-        monkeypatch.setattr(km, "_TRAIN_MEMO", {})
+        train_cache.clear()
 
 
-def test_index_store_validator_is_the_shared_one():
+def test_index_store_validator_is_the_shared_one(tmp_path):
     """index_store and train_cache must enforce ONE value discipline
-    (ADVICE r16 #2): same function object, same packing cap."""
-    from doc2vec_spark import index_store, train_cache
+    (ADVICE r16 #2): every corrupt payload below is rejected both by
+    AnnIndexStore.load/load_pq and by the disk tier's decoder for the same
+    shape, and a valid payload decodes identically on both planes."""
+    import json
 
-    assert index_store._finite_floats is train_cache.finite_components
-    assert index_store.CELL_ID_CAP == train_cache.CELL_ID_CAP
+    from doc2vec_spark import train_cache
+    from doc2vec_spark.index_store import INDEX_KEY, PQ_KEY, AnnIndexStore
+
+    tok = ("v", 1)
+    ixs = AnnIndexStore(str(tmp_path / "kv.json"))
+
+    def via_store(kv_key, field, payload):
+        ixs.kv.put(kv_key, json.dumps({"version": repr(tok), field: payload}))
+        return ixs.load(tok) if kv_key == INDEX_KEY else ixs.load_pq(tok)
+
+    def centroids(p):
+        return train_cache.decode_centroids(p, train_cache.finite_components)
+
+    bad_centroids = [
+        "abc", [], {}, {"0": "abc"}, {"0": []}, {"0": [True]}, {"0": ["1.5"]},
+        {"0": [float("inf")]}, {"x": [1.0]}, {"100": [1.0]}, {"-1": [1.0]},
+        {" 7": [1.0]}, {"+7": [1.0]}, {"7_0": [1.0]}, {"²": [1.0]},
+        {"7": [1.0], "07": [2.0]},  # two keys alias one cell id
+    ]
+    for bad in bad_centroids:
+        assert via_store(INDEX_KEY, "centroids", bad) is None, bad
+        assert centroids(bad) is None, bad
+        # the k-means disk tier's variant of the same decoder
+        assert train_cache.decode_centroids(bad, train_cache.integer_components) is None
+    bad_codebooks = [
+        "abc", [], [[]], [["abc"]], [[[0.1, "x"]]], [[[0.1]], "not-a-subspace"],
+        [[[float("nan")]]], [[[True]]], [5], {"0": [[0.1]]},
+    ]
+    for bad in bad_codebooks:
+        assert via_store(PQ_KEY, "codebooks", bad) is None, bad
+        assert train_cache.decode_codebooks(bad) is None, bad
+    good = {"3": [0.5, -0.25], "0": [1, 2.0]}
+    assert via_store(INDEX_KEY, "centroids", good) == centroids(good)
+    assert centroids(good) == {3: [0.5, -0.25], 0: [1.0, 2.0]}
+    cbs = [[[0.1, 0.2]], [[0.3, 0.4]]]
+    assert via_store(PQ_KEY, "codebooks", cbs) == train_cache.decode_codebooks(cbs)
+    assert train_cache.decode_codebooks(cbs) == cbs
 
 
 # ---------------------------------------------------------------------------

@@ -3,7 +3,7 @@
 Pins the internals that r22 optimizations / correctness fixes changed:
 - coreset.dataset_fingerprint now recurses into nested directory layouts
   (VERDICT r20 #1 / r21 #5: the one-level fold missed in-place rewrites of
-  part files two levels down, so _TRAIN_MEMO/_FPS_MEMO could serve stale
+  part files two levels down, so the trained-artifact cache could serve stale
   artifacts after a same-path data rewrite).
 """
 
@@ -359,3 +359,31 @@ def test_constant_key_joins_plan_broadcast_hash(spark, module, qname):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_q15_max_probe_joins_on_bigint_cents(spark):
+    """ADVICE r22: tpch_q15's rev ⋈ mx join compares integer cents, not
+    exact doubles, so an ulp-level recompute of either side (cache
+    eviction mid-action) cannot drop the top supplier."""
+    from doc2vec_spark.operators.tpch_extra import tpch_q15_top_supplier
+    from tests.conftest import SF_DIR
+
+    def joins(node):
+        if node.nodeName() == "BroadcastHashJoin":
+            yield node
+        for i in range(node.children().size()):
+            yield from joins(node.children().apply(i))
+
+    def keys(seq):
+        return [seq.apply(i) for i in range(seq.size())]
+
+    plan = tpch_q15_top_supplier(spark, SF_DIR)._jdf.queryExecution().sparkPlan()
+    probe = [
+        j
+        for j in joins(plan)
+        if "total_revenue" in j.leftKeys().mkString(",")
+    ]
+    assert len(probe) == 1
+    types = [k.dataType().simpleString() for k in keys(probe[0].leftKeys())]
+    types += [k.dataType().simpleString() for k in keys(probe[0].rightKeys())]
+    assert types == ["bigint", "bigint"]
