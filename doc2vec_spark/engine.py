@@ -25,7 +25,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doc2vec_spark.store import ChunkStore, SyncStateStore
+from doc2vec_spark.store import ChunkStore
 from doc2vec_spark.sync import SyncCounters, sync_documents
 
 _ENV_RE = re.compile(r"\$\{([A-Za-z_][A-Za-z0-9_]*)\}")
@@ -62,7 +62,6 @@ class Doc2VecSparkEngine:
     def __init__(self, spark: SparkSession, store_path: str):
         self.spark = spark
         self.store = ChunkStore(spark, os.path.join(store_path, "chunks"))
-        self.state = SyncStateStore(os.path.join(store_path, "sync_state.json"))
 
     # -- ingestion plane -----------------------------------------------------
 

@@ -19,15 +19,25 @@ of a 100 TB store, not all of it. The manifest flips atomically last
 (write-ahead versioning), giving the all-or-nothing visibility the
 reference approximates with its `sync_complete` flag (W8) — on a real
 deployment this is exactly a Delta/Iceberg MERGE with partition overwrite
-(`replaceWhere`), and the url-bucket layout is the same lever layout.py
-proves Exchange-free for url-keyed joins. Within each version, files
-partition by product_name (the reference's per-product databases,
-mcp/src/server.ts:417-430) so metadata-filtered KNN prunes at the scan.
-Commits serialize on an advisory flock (two unlocked commits would lose one
-set of bucket pointers); superseded version directories survive exactly one
-further commit before GC, so readers holding the previous manifest finish
-their scans (a deployment would widen that to a snapshot-isolation TTL).
-``rebucket`` migrates a store to a new bucket count in one rewrite.
+(`replaceWhere`). Within each version, files partition by product_name (the
+reference's per-product databases, mcp/src/server.ts:417-430) so
+metadata-filtered KNN prunes at the scan. Commits serialize on an advisory
+flock (two unlocked commits would lose one set of bucket pointers);
+superseded version directories survive exactly one further commit before
+GC, so readers holding the previous manifest finish their scans (a
+deployment would widen that to a snapshot-isolation TTL).
+
+Every version is written one way, ``_commit``: write the rows into a new
+version directory, point the rewritten buckets at it, retire what it
+superseded, flip the manifest, GC. ``apply`` commits the touched buckets.
+``rebucket`` is the one way to change the bucket count: it commits every
+row under the new count in one flip, and deferred GC keeps readers of the
+old layout working. A commit that dies before the flip leaves the previous
+version current and an orphan directory the next commit's GC removes.
+
+A missing MANIFEST is a fresh store. A MANIFEST that exists but cannot be
+read raises on every read and commit: treating it as empty would let the
+next commit restart the counter and GC every version directory.
 
 Snapshot reads are job-free: the store's schema is declared
 (``STORE_SCHEMA``), never inferred, so every version directory is read with
@@ -71,6 +81,15 @@ _VERSION_SCHEMA = T.StructType(
 )
 
 
+def _write_json(path: str, obj: dict) -> None:
+    """Atomic JSON replace: readers see the old file or the new one, never
+    a torn write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 class ChunkStore:
     def __init__(self, spark: SparkSession, path: str, num_buckets: int = DEFAULT_NUM_BUCKETS):
         self.spark = spark
@@ -84,20 +103,15 @@ class ChunkStore:
         return os.path.join(self.path, "MANIFEST")
 
     def _manifest(self) -> dict:
+        path = self._manifest_path()
         try:
-            with open(self._manifest_path()) as f:
+            with open(path) as f:
                 m = json.load(f)
-            if not isinstance(m.get("buckets"), dict):
-                raise ValueError("bad manifest")
-            return m
-        except (OSError, ValueError):
+        except FileNotFoundError:
             return {"counter": 0, "num_buckets": self.num_buckets, "buckets": {}}
-
-    def _flip(self, manifest: dict) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())  # atomic flip = the "transaction"
+        if not isinstance(m, dict) or not isinstance(m.get("buckets"), dict):
+            raise ValueError(f"malformed chunk-store manifest: {path}")
+        return m
 
     @contextmanager
     def _write_lock(self):
@@ -168,11 +182,6 @@ class ChunkStore:
         the manifest and lists the live version directories on the driver,
         and launches no Spark job (see the module docstring for the listing
         bound)."""
-        # resolve every key present in the manifest rather than range(nb):
-        # during an incremental rebucket the key space is MIXED — un-migrated
-        # old-layout buckets plus migrated new-layout buckets — and the two
-        # are disjoint by construction (see rebucket_start), so the union of
-        # all keys is always exactly one copy of every row
         manifest = self._manifest()
         return self._read_buckets(manifest, sorted(int(k) for k in manifest["buckets"]))
 
@@ -256,48 +265,12 @@ class ChunkStore:
         with self._write_lock():
             manifest = self._manifest()
             nb = manifest.get("num_buckets", self.num_buckets)
-            mig = manifest.get("migration")
-
-            if mig is None:
-                affected = sorted(
-                    r["b"]
-                    for r in touched.select(self._bucket_expr(nb).alias("b")).distinct().collect()
-                )
-                if not affected:
-                    return
-                write_nb = nb
-                drop_keys: list[int] = []
-                expect = list(affected)
-            else:
-                # mid-migration commit: a touched url lives either in an
-                # un-migrated OLD bucket or in a migrated NEW bucket. Old
-                # buckets this commit touches are migrated opportunistically
-                # (their full contents rewritten in the new layout), so
-                # writes never extend the old layout's lifetime.
-                new_nb, migrated = mig["target"], set(mig["migrated"])
-                tb = (
-                    touched.select(
-                        self._bucket_expr(nb).alias("ob"),
-                        self._bucket_expr(new_nb).alias("nbk"),
-                    )
-                    .distinct()
-                    .collect()
-                )
-                old_aff = sorted({r["ob"] for r in tb} - migrated)
-                new_aff = sorted({r["nbk"] for r in tb if r["ob"] in migrated})
-                if not old_aff and not new_aff:
-                    return
-                write_nb = new_nb
-                drop_keys = old_aff
-                # every new-layout bucket this commit can produce: the image
-                # sets of the old buckets being migrated plus the already-
-                # migrated buckets being edited (disjoint; nb divides new_nb)
-                expect = sorted(
-                    set(new_aff)
-                    | {b + k * nb for b in old_aff for k in range(new_nb // nb)}
-                )
-                affected = old_aff + new_aff
-
+            affected = sorted(
+                r["b"]
+                for r in touched.select(self._bucket_expr(nb).alias("b")).distinct().collect()
+            )
+            if not affected:
+                return
             # no broadcast hint: a full-listing sync routes EVERY source url
             # through `touched`, far beyond broadcast scale at the store's
             # target size — AQE picks broadcast itself whenever the set is
@@ -306,156 +279,52 @@ class ChunkStore:
                 touched, "url", "left_anti"
             )
             out = kept if new_chunks is None else kept.unionByName(new_chunks)
-
-            old_versions = set(manifest["buckets"].values())
-            manifest["counter"] += 1
-            name = f"v{manifest['counter']:08d}-{uuid.uuid4().hex[:8]}"
-            out_dir = os.path.join(self.path, name)
-            (
-                out.withColumn("bucket", self._bucket_expr(write_nb))
-                .repartition(max(len(expect), 1), F.col("bucket"))
-                .write.partitionBy("bucket", "product_name")
-                .mode("overwrite")
-                .parquet(out_dir)
-            )
-            for b in drop_keys:  # old-layout keys superseded by migration
-                manifest["buckets"].pop(str(b), None)
-            # a bucket left empty by deletes has no bucket=K dir -> drop its entry
-            for b in expect:
-                if os.path.isdir(os.path.join(out_dir, f"bucket={b}")):
-                    manifest["buckets"][str(b)] = name
-                else:
-                    manifest["buckets"].pop(str(b), None)
-            if mig is not None:
-                mig["migrated"] = sorted(set(mig["migrated"]) | set(drop_keys))
-                self._maybe_finalize_migration(manifest)
-            live = set(manifest["buckets"].values())
-            manifest["retired"] = sorted(old_versions - live)
-            self._flip(manifest)
-            self._gc(manifest)
+            self._commit(manifest, out, nb, affected)
 
     def rebucket(self, new_num_buckets: int) -> None:
-        """Migration (VERDICT r02 #7): rewrite the store ONCE under a new
-        url-bucket count and flip — a store created small (16 buckets) can
-        grow toward the 100 TB layout (thousands of buckets) without losing
-        commit-counter continuity or changing read() contents. One full
-        rewrite is the honest cost: the bucket id is pmod(hash(url), nb), so
-        every row can move. Subsequent commits rewrite only touched buckets
-        of the new layout."""
+        """Change the bucket count (VERDICT r02 #7): rewrite the store ONCE
+        under ``new_num_buckets`` and flip — a store created small (16
+        buckets) can grow toward the 100 TB layout (thousands of buckets)
+        without losing commit-counter continuity or changing read()
+        contents. One full rewrite is the honest cost: the bucket id is
+        pmod(hash(url), nb), so every row can move. Subsequent commits
+        rewrite only touched buckets of the new layout."""
         if new_num_buckets < 1:
             raise ValueError("new_num_buckets must be >= 1")
         with self._write_lock():
             manifest = self._manifest()
-            old_nb = manifest.get("num_buckets", self.num_buckets)
-            all_rows = self._read_buckets(manifest, list(range(old_nb)))
-
-            old_versions = set(manifest["buckets"].values())
-            manifest["counter"] += 1
-            name = f"v{manifest['counter']:08d}-{uuid.uuid4().hex[:8]}"
-            out_dir = os.path.join(self.path, name)
-            (
-                all_rows.withColumn("bucket", self._bucket_expr(new_num_buckets))
-                .repartition(new_num_buckets, F.col("bucket"))
-                .write.partitionBy("bucket", "product_name")
-                .mode("overwrite")
-                .parquet(out_dir)
-            )
-            manifest["buckets"] = {
-                str(b): name
-                for b in range(new_num_buckets)
-                if os.path.isdir(os.path.join(out_dir, f"bucket={b}"))
-            }
-            manifest["num_buckets"] = new_num_buckets
-            manifest.pop("migration", None)  # a full rewrite subsumes any
-            manifest["retired"] = sorted(old_versions)
+            rows = self._read_buckets(manifest, sorted(int(k) for k in manifest["buckets"]))
+            self._commit(manifest, rows, new_num_buckets, list(range(new_num_buckets)))
             self.num_buckets = new_num_buckets
-            self._flip(manifest)
-            self._gc(manifest)
 
-    # -- incremental rebucket (VERDICT r03 #8) -------------------------------
-    # The full rebucket above rewrites the whole store in ONE commit — at the
-    # 100 TB layout that is a single giant job and a long write outage for
-    # the commit lock. The incremental path migrates N old buckets per
-    # commit behind the same lock. Correctness hinges on one invariant:
-    # new_num_buckets is a MULTIPLE of the old count, so old bucket b's rows
-    # land exactly in the new-layout image set {b + k*old_nb} — image sets of
-    # distinct old buckets are disjoint, and a manifest key is unambiguous
-    # (key K is new-layout iff K % old_nb is in migration.migrated, which
-    # read() never needs to know: it just resolves every key). Readers stay
-    # green throughout: each commit atomically swaps one batch of old keys
-    # for their images, and deferred GC keeps the prior snapshot's files
-    # alive through the next commit.
-
-    def _maybe_finalize_migration(self, manifest: dict) -> None:
-        mig = manifest.get("migration")
-        old_nb = manifest.get("num_buckets", self.num_buckets)
-        if mig is not None and len(mig["migrated"]) == old_nb:
-            manifest["num_buckets"] = mig["target"]
-            self.num_buckets = mig["target"]
-            manifest.pop("migration", None)
-
-    def rebucket_start(self, new_num_buckets: int) -> None:
-        """Begin an incremental migration to ``new_num_buckets`` (must be a
-        proper multiple of the current count). Manifest-only commit; data
-        moves in subsequent ``rebucket_step`` / ``apply`` commits (apply
-        migrates the old buckets it touches opportunistically)."""
-        with self._write_lock():
-            manifest = self._manifest()
-            old_nb = manifest.get("num_buckets", self.num_buckets)
-            if manifest.get("migration") is not None:
-                raise ValueError("a rebucket migration is already in progress")
-            if new_num_buckets <= old_nb or new_num_buckets % old_nb != 0:
-                raise ValueError(
-                    f"incremental rebucket needs a proper multiple of {old_nb} "
-                    f"(got {new_num_buckets}); use rebucket() for arbitrary counts"
-                )
-            manifest["migration"] = {"target": new_num_buckets, "migrated": []}
-            manifest["counter"] += 1
-            manifest["retired"] = []
-            self._flip(manifest)
-
-    def rebucket_step(self, max_buckets: int = 4) -> int:
-        """Migrate up to ``max_buckets`` not-yet-migrated old buckets in one
-        commit; returns how many old buckets remain. Finalizes (flips
-        num_buckets to the target) when the last batch lands."""
-        with self._write_lock():
-            manifest = self._manifest()
-            mig = manifest.get("migration")
-            if mig is None:
-                return 0
-            old_nb = manifest.get("num_buckets", self.num_buckets)
-            new_nb, migrated = mig["target"], set(mig["migrated"])
-            batch = [b for b in range(old_nb) if b not in migrated][:max_buckets]
-
-            old_versions = set(manifest["buckets"].values())
-            manifest["counter"] += 1
-            if batch:
-                name = f"v{manifest['counter']:08d}-{uuid.uuid4().hex[:8]}"
-                out_dir = os.path.join(self.path, name)
-                images = sorted(
-                    b + k * old_nb for b in batch for k in range(new_nb // old_nb)
-                )
-                (
-                    self._read_buckets(manifest, batch)
-                    .withColumn("bucket", self._bucket_expr(new_nb))
-                    .repartition(len(images), F.col("bucket"))
-                    .write.partitionBy("bucket", "product_name")
-                    .mode("overwrite")
-                    .parquet(out_dir)
-                )
-                for b in batch:
-                    manifest["buckets"].pop(str(b), None)
-                for b in images:
-                    if os.path.isdir(os.path.join(out_dir, f"bucket={b}")):
-                        manifest["buckets"][str(b)] = name
-                mig["migrated"] = sorted(migrated | set(batch))
-            remaining = old_nb - len(mig["migrated"])
-            self._maybe_finalize_migration(manifest)
-            live = set(manifest["buckets"].values())
-            manifest["retired"] = sorted(old_versions - live)
-            self._flip(manifest)
-            self._gc(manifest)
-            return remaining
+    def _commit(self, manifest: dict, rows: DataFrame, nb: int, buckets: list[int]) -> None:
+        """Write ``rows`` — the full new contents of ``buckets`` in an
+        ``nb``-bucket layout — as one new version and flip to it. Caller
+        holds the write lock. Every version this commit supersedes is
+        retired, not deleted: GC removes it at the next commit."""
+        old_versions = set(manifest["buckets"].values())
+        manifest["counter"] += 1
+        name = f"v{manifest['counter']:08d}-{uuid.uuid4().hex[:8]}"
+        out_dir = os.path.join(self.path, name)
+        (
+            rows.withColumn("bucket", self._bucket_expr(nb))
+            .repartition(max(len(buckets), 1), F.col("bucket"))
+            .write.partitionBy("bucket", "product_name")
+            .mode("overwrite")
+            .parquet(out_dir)
+        )
+        # a bucket left empty by deletes has no bucket=K dir -> drop its entry
+        for b in buckets:
+            if os.path.isdir(os.path.join(out_dir, f"bucket={b}")):
+                manifest["buckets"][str(b)] = name
+            else:
+                manifest["buckets"].pop(str(b), None)
+        # keys of a larger superseded layout (rebucket to fewer buckets)
+        manifest["buckets"] = {k: v for k, v in manifest["buckets"].items() if int(k) < nb}
+        manifest["num_buckets"] = nb
+        manifest["retired"] = sorted(old_versions - set(manifest["buckets"].values()))
+        _write_json(self._manifest_path(), manifest)  # atomic flip = the "transaction"
+        self._gc(manifest)
 
     def upsert_documents(self, chunks: DataFrame) -> None:
         """K1/K2: replace all chunks of every url present in ``chunks``,
@@ -505,25 +374,14 @@ class SyncStateStore:
         return self._load().get(key, default)
 
     def put(self, key: str, value: str) -> None:
-        state = self._load()
-        state[key] = value
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        self.put_many({key: value})
 
     def put_many(self, items: dict[str, str]) -> None:
         state = self._load()
         state.update(items)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        _write_json(self.path, state)
 
     def delete(self, key: str) -> None:
         state = self._load()
         state.pop(key, None)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        _write_json(self.path, state)

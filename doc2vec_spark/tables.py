@@ -8,6 +8,7 @@ Iceberg at 100 TB) is a one-file change.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -62,8 +63,10 @@ def ensure_shipped(spark: SparkSession) -> None:
 # multi-million-file corpus is a full footer sweep. The key carries the
 # path's (mtime_ns, size) stat signature, so a table rewritten at the same
 # path (tests do this) re-infers instead of serving a stale schema; an
-# unstattable path falls through to plain inference.
+# unstattable path falls through to plain inference. The lock guards the
+# dict only, never ``spark.read`` (concurrent loads share one session).
 _SCHEMA_CACHE: dict[tuple, object] = {}
+_SCHEMA_LOCK = threading.Lock()
 
 
 def _path_sig(path: str) -> tuple | None:
@@ -91,15 +94,18 @@ def _read_parquet(spark: SparkSession, path: str):
     if sig is None:
         return spark.read.parquet(path)
     key = (path, sig)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
+    with _SCHEMA_LOCK:
+        schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    schema = df.schema
+    with _SCHEMA_LOCK:
         # drop stale signatures for the same path before memoizing the new one
         for k in [k for k in _SCHEMA_CACHE if k[0] == path]:
             del _SCHEMA_CACHE[k]
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+        _SCHEMA_CACHE[key] = schema
+    return df
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

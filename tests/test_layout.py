@@ -1,50 +1,6 @@
-"""Bucketed-layout test: co-bucketed url joins must plan without a shuffle."""
+"""Planning-tooling smoke test: scripts/stamp_budget.py runs and reports."""
 
 from __future__ import annotations
-
-import pytest
-
-from pyspark.sql import functions as F
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    from doc2vec_spark.layout import bucketed_join, write_bucketed
-    from doc2vec_spark.plans.checks import formatted_plan
-
-    # spark.sql.warehouse.dir is static; tables land in ./spark-warehouse
-    # (gitignored) and are dropped at the end
-    chunks = spark.createDataFrame(
-        [(f"https://d/{i % 50}", i, f"hash{i}") for i in range(500)],
-        "url string, chunk_index int, hash string",
-    )
-    stored = chunks.withColumn("hash", F.concat(F.col("hash"), F.lit("_old")))
-
-    import shutil
-
-    for t in ("chunks_new_t", "chunks_old_t"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    write_bucketed(chunks, "chunks_new_t", num_buckets=8)
-    write_bucketed(stored, "chunks_old_t", num_buckets=8)
-
-    # force the sort-merge path (tiny test tables would otherwise broadcast,
-    # and the planner disables bucketed reads under a broadcast join)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "chunks_new_t", "chunks_old_t", "url")
-        plan = formatted_plan(joined)
-        assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan}"
-        assert "SortMergeJoin" in plan
-        assert joined.count() > 0
-
-        # control: the same join on plain (unbucketed) frames DOES shuffle
-        plain = chunks.join(stored.withColumnRenamed("hash", "h2"), "url")
-        assert "Exchange" in formatted_plan(plain)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS chunks_new_t")
-        spark.sql("DROP TABLE IF EXISTS chunks_old_t")
 
 
 def test_stamp_budget_tool_runs():

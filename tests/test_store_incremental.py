@@ -240,6 +240,7 @@ def test_rebucket_migration_preserves_contents(spark, tmp_path):
         (r["url"], r["chunk_id"]) for r in store.read().select("url", "chunk_id").collect()
     )
     c_before = store._manifest()["counter"]
+    held = store.read().select("url", "chunk_id")  # a reader mid-flight
 
     store.rebucket(64)
     m = store._manifest()
@@ -248,6 +249,8 @@ def test_rebucket_migration_preserves_contents(spark, tmp_path):
         (r["url"], r["chunk_id"]) for r in store.read().select("url", "chunk_id").collect()
     )
     assert after == before
+    # the old layout's files outlive the flip: the held snapshot still scans
+    assert sorted((r["url"], r["chunk_id"]) for r in held.collect()) == before
 
     # a fresh handle picks the migrated bucket count up from the manifest,
     # and a touched-url commit under the new layout still works
@@ -284,99 +287,80 @@ def test_concurrent_commits_serialize_on_lock(spark, tmp_path):
     assert urls == {"https://d/0", "https://d/1"}
 
 
-def test_incremental_rebucket_reads_green_throughout(spark, tmp_path):
-    """VERDICT r03 #8: 16 -> 64 buckets in 4 batched commits behind the same
-    lock; read() returns identical contents after every step, a
-    mid-migration upsert commits correctly (and opportunistically migrates
-    the old buckets it touches), and the final manifest matches the target
-    layout."""
-    from doc2vec_spark.chunking import chunk_documents
-    from doc2vec_spark.embedding import with_embeddings
+def _put(spark, store, ids, body):
+    """One upsert commit of one hand-built chunk per url (no chunker or
+    embedder stage, so a commit costs only the store's own jobs)."""
+    from doc2vec_spark.store import STORE_SCHEMA
+
+    rows = [
+        (f"https://d/{i}", "p", "1", None, None, [f"D{i}"], f"D{i}", f"d{i}-0",
+         f"doc {i} {body}", f"h{i}-{body}", 0, 1, [1.0, 0.0])
+        for i in ids
+    ]
+    store.upsert_documents(spark.createDataFrame(rows, STORE_SCHEMA))
+
+
+def _rows(store):
+    return sorted(
+        (r["url"], r["chunk_id"], r["content"])
+        for r in store.read().select("url", "chunk_id", "content").collect()
+    )
+
+
+def test_commit_crash_before_flip_keeps_previous_version(spark, tmp_path, monkeypatch):
+    """A commit that dies between the data write and the manifest flip
+    changes nothing readers see, releases the write lock, and leaves an
+    orphan version dir that the next commit's GC removes."""
+    import fcntl
+
+    from doc2vec_spark import store as store_mod
     from doc2vec_spark.store import ChunkStore
 
     root = str(tmp_path / "chunks")
-    store = ChunkStore(spark, root, num_buckets=16)
-    docs = _docs(
-        spark,
-        [(f"https://d/{i}", f"# D{i}\n{BODY} doc {i}.", "prod", "1.0") for i in range(40)],
-    )
-    store.upsert_documents(with_embeddings(chunk_documents(docs)))
+    store = ChunkStore(spark, root, num_buckets=2)
+    _put(spark, store, [0, 1], "v1")
+    token, before, dirs = store.version_token(), _rows(store), set(_version_dirs(root))
 
-    def snapshot():
-        return sorted(
-            (r["url"], r["chunk_id"])
-            for r in store.read().select("url", "chunk_id").collect()
-        )
+    def crash(path, obj):
+        raise OSError("simulated crash before the manifest flip")
 
-    before = snapshot()
-    store.rebucket_start(64)
+    with monkeypatch.context() as m:
+        m.setattr(store_mod, "_write_json", crash)
+        with pytest.raises(OSError, match="simulated crash"):
+            _put(spark, store, [0], "v2")
+    orphans = set(_version_dirs(root)) - dirs
+    assert len(orphans) == 1  # the data write landed, the flip did not
+    assert store.version_token() == token
+    assert _rows(store) == before
 
-    remaining = 16
-    steps = 0
-    while remaining:
-        remaining = store.rebucket_step(max_buckets=4)
-        steps += 1
-        assert snapshot() == before, f"read drifted after step {steps}"
-        m = store._manifest()
-        if remaining:
-            assert m["num_buckets"] == 16 and m["migration"]["target"] == 64
-            # mixed manifest invariant: a key outside the old layout's range
-            # may only exist if its owning old bucket (key % 16) has been
-            # migrated — otherwise a row could resolve through both layouts
-            migrated = set(m["migration"]["migrated"])
-            for k in m["buckets"]:
-                if int(k) >= 16:
-                    assert int(k) % 16 in migrated, (k, sorted(migrated))
-    assert steps <= 4 + 1  # 16 buckets / 4 per commit (+1 no-op tolerance)
-    m = store._manifest()
-    assert m["num_buckets"] == 64 and "migration" not in m
-    assert snapshot() == before
+    with open(os.path.join(root, ".lock"), "w") as f:  # lock was released
+        fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        fcntl.flock(f, fcntl.LOCK_UN)
 
-    # post-migration commit uses the 64-bucket layout
-    one = _docs(spark, [("https://d/3", f"# D3\n{BODY} EDITED.", "prod", "1.0")])
-    store.upsert_documents(with_embeddings(chunk_documents(one)))
-    assert {r["url"] for r in store.read().select("url").distinct().collect()} == {
-        f"https://d/{i}" for i in range(40)
-    }
+    _put(spark, store, [0], "v3")
+    assert store.version_token()[0] == token[0] + 1
+    assert not orphans & set(_version_dirs(root))
+    assert any("v3" in c for u, _, c in _rows(store) if u == "https://d/0")
 
 
-def test_upsert_during_migration_commits_and_migrates_touched(spark, tmp_path):
-    from doc2vec_spark.chunking import chunk_documents
-    from doc2vec_spark.embedding import with_embeddings
+def test_corrupt_manifest_raises_instead_of_wiping_the_store(spark, tmp_path):
+    """An unreadable MANIFEST is an error, not an empty store: read() and
+    apply() raise, and no version dir is collected."""
     from doc2vec_spark.store import ChunkStore
 
     root = str(tmp_path / "chunks")
-    store = ChunkStore(spark, root, num_buckets=16)
-    docs = _docs(
-        spark,
-        [(f"https://d/{i}", f"# D{i}\n{BODY} doc {i}.", "prod", "1.0") for i in range(24)],
-    )
-    store.upsert_documents(with_embeddings(chunk_documents(docs)))
-    store.rebucket_start(64)
-    store.rebucket_step(max_buckets=6)  # partial: 6 of 16 migrated
-    migrated_before = set(store._manifest()["migration"]["migrated"])
-
-    # pick a url living in a NOT-yet-migrated old bucket
-    buckets = {
-        r["url"]: r["b"]
-        for r in docs.select("url", F.pmod(F.xxhash64("url"), F.lit(16)).cast("int").alias("b")).collect()
-    }
-    url = next(u for u, b in buckets.items() if b not in migrated_before)
-    edited = _docs(spark, [(url, f"# E\n{BODY} EDITED.", "prod", "1.0")])
-    store.upsert_documents(with_embeddings(chunk_documents(edited)))
-    m = store._manifest()
-    assert m["num_buckets"] == 16 and m.get("migration") is not None
-    # the touched url's old bucket was migrated opportunistically
-    assert set(m["migration"]["migrated"]) == migrated_before | {buckets[url]}
-    urls = {r["url"] for r in store.read().select("url").distinct().collect()}
-    assert urls == {f"https://d/{i}" for i in range(24)}
-
-    # drain the rest; reads stay green and the store finalizes
-    while store.rebucket_step(max_buckets=6):
-        pass
-    m = store._manifest()
-    assert m["num_buckets"] == 64 and "migration" not in m
-    assert {r["url"] for r in store.read().select("url").distinct().collect()} == urls
+    store = ChunkStore(spark, root, num_buckets=2)
+    _put(spark, store, [0, 1], "v1")
+    dirs = _version_dirs(root)
+    manifest = os.path.join(root, "MANIFEST")
+    for junk in ("[1]", "{"):
+        with open(manifest, "w") as f:
+            f.write(junk)
+        with pytest.raises(ValueError):
+            store.read()
+    with pytest.raises(ValueError):
+        store.apply(None, spark.createDataFrame([("https://d/0",)], "url string"))
+    assert _version_dirs(root) == dirs
 
 
 def _jobs_in_group(spark, group, fn):
