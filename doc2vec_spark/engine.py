@@ -132,12 +132,12 @@ class Doc2VecSparkEngine:
     def get_chunks(self, url: str, start: int | None = None, end: int | None = None) -> DataFrame:
         from doc2vec_spark.query import get_chunks
 
-        return get_chunks(self.store.read(), url, start, end)
+        return get_chunks(self.store.read_url(url), url, start, end)
 
     def reconstruct_page(self, url: str) -> str | None:
         from doc2vec_spark.query import reconstruct_page
 
-        rows = reconstruct_page(self.store.read(), url).collect()
+        rows = reconstruct_page(self.store.read_url(url), url).collect()
         return rows[0]["page"] if rows else None
 
     # -- observability -------------------------------------------------------

@@ -1,7 +1,8 @@
 """SparkSession factory.
 
-Tuned for the driver environment (local[32], 128 GiB) but every setting is
-chosen to also be the right default on a large cluster:
+Runs ``local[n]`` with n = ``SPARK_GRAFT_CPUS``, else the CPUs this process
+may run on. Every setting is chosen to also be the right default on a large
+cluster:
 
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting and
   dynamic broadcast conversion are exactly what keeps 100 TB plans healthy.
@@ -21,7 +22,8 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 # tmpfs scratch is only safe when the expected shuffle/spill volume fits

@@ -48,6 +48,18 @@ listing stays on the driver while no directory it walks has more entries
 than ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32 by
 default); past that, Spark lists in parallel with a job of its own.
 
+Each store keeps the one snapshot it resolved last, keyed by the manifest it
+was resolved from (``version_token()``). ``read()`` still reads MANIFEST on
+every call, so a commit made through another ``ChunkStore`` on the same path
+shows in the next read, and a corrupt MANIFEST still raises; only the
+listing and the union of version scans are reused while the token is
+unchanged. The memo cannot outlive its files: it is replaced as soon as the
+manifest moves, and GC keeps a superseded version one commit longer.
+
+A url's rows all live in one bucket, so ``read_url`` reads only that
+bucket: the bucket id is Spark's own ``xxhash64`` computed on the driver
+over py4j (no Spark job), taken ``pmod`` the manifest's bucket count.
+
 A small KV `sync_state` table mirrors vec_metadata (database.ts:121-126)
 for watermarks.
 """
@@ -57,6 +69,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import uuid
 from contextlib import contextmanager
 
@@ -90,12 +103,21 @@ def _write_json(path: str, obj: dict) -> None:
     os.replace(tmp, path)
 
 
+def _token(manifest: dict) -> tuple:
+    return (manifest["counter"], tuple(sorted(manifest["buckets"].items())))
+
+
 class ChunkStore:
     def __init__(self, spark: SparkSession, path: str, num_buckets: int = DEFAULT_NUM_BUCKETS):
         self.spark = spark
         self.path = path.rstrip("/")
         self.num_buckets = num_buckets
         os.makedirs(self.path, exist_ok=True)
+        # (token, frame) of the last snapshot read() resolved; the lock
+        # guards the pair and is never held across a Spark call
+        self._snapshot: tuple[tuple, DataFrame] | None = None
+        self._snapshot_lock = threading.Lock()
+        self._xxh64 = None  # (XXH64(42) over py4j, byte[] base offset)
 
     # -- manifest machinery --------------------------------------------------
 
@@ -146,6 +168,23 @@ class ChunkStore:
     def _bucket_expr(self, nb: int):
         return F.pmod(F.xxhash64(F.col("url")), F.lit(nb)).cast("int")
 
+    def _url_bucket(self, url: str, nb: int) -> int:
+        """``_bucket_expr`` for one url, on the driver with no Spark job:
+        Spark's own XXH64 (seed 42) over the url's UTF-8 bytes, over py4j.
+        py4j cannot call the static ``hashUnsafeBytes(base, off, len, seed)``
+        next to its instance overload, so this calls the instance method of
+        ``XXH64(42)``, looked up once per store. Python's ``%`` is ``pmod``
+        for a positive ``nb``."""
+        if self._xxh64 is None:
+            jvm = self.spark._jvm
+            self._xxh64 = (
+                jvm.org.apache.spark.sql.catalyst.expressions.XXH64(42),
+                jvm.org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
+            )
+        hasher, offset = self._xxh64
+        data = url.encode("utf-8")
+        return hasher.hashUnsafeBytes(data, offset, len(data)) % nb
+
     def _read_buckets(self, manifest: dict, buckets: list[int]) -> DataFrame:
         # group by owning version: one scan per version dir (with basePath so
         # bucket/product_name partition columns parse), unioned by name —
@@ -181,9 +220,33 @@ class ChunkStore:
         The schema is declared, never inferred: resolving the snapshot reads
         the manifest and lists the live version directories on the driver,
         and launches no Spark job (see the module docstring for the listing
-        bound)."""
+        bound).
+
+        Every call reads MANIFEST (a corrupt one raises). While its token is
+        the one the last resolved snapshot came from, that same frame is
+        returned with no listing; otherwise the new snapshot is resolved
+        and replaces it. Callers must not ``persist``/``unpersist`` the
+        returned frame itself, which other callers share: derive from it."""
         manifest = self._manifest()
-        return self._read_buckets(manifest, sorted(int(k) for k in manifest["buckets"]))
+        token = _token(manifest)
+        with self._snapshot_lock:
+            memo = self._snapshot
+        if memo is not None and memo[0] == token:
+            return memo[1]
+        frame = self._read_buckets(manifest, sorted(int(k) for k in manifest["buckets"]))
+        with self._snapshot_lock:
+            self._snapshot = (token, frame)
+        return frame
+
+    def read_url(self, url: str) -> DataFrame:
+        """The current snapshot's rows for ``url`` (``STORE_SCHEMA``), read
+        from that url's bucket alone. Like ``read()`` it reads MANIFEST on
+        every call and launches no Spark job to resolve."""
+        manifest = self._manifest()
+        nb = manifest.get("num_buckets", self.num_buckets)
+        return self._read_buckets(manifest, [self._url_bucket(url, nb)]).filter(
+            F.col("url") == url
+        )
 
     def count(self) -> int:
         return self.read().count()
@@ -191,8 +254,7 @@ class ChunkStore:
     def version_token(self) -> tuple:
         """Cheap identity of the current committed state (tests use this to
         assert that a no-op sync does not advance the store)."""
-        m = self._manifest()
-        return (m["counter"], tuple(sorted(m["buckets"].items())))
+        return _token(self._manifest())
 
     # -- writes (K1-K5) ------------------------------------------------------
 
@@ -364,11 +426,19 @@ class SyncStateStore:
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
 
     def _load(self) -> dict[str, str]:
+        """A missing file is an empty store. A file that exists but is not a
+        JSON object raises, as a corrupt MANIFEST does: reading it as empty
+        would let the next put rewrite the file with only its own keys."""
         try:
             with open(self.path) as f:
-                return json.load(f)
-        except (OSError, ValueError):
+                state = json.load(f)
+        except FileNotFoundError:
             return {}
+        except ValueError as e:
+            raise ValueError(f"unreadable sync-state file: {self.path}") from e
+        if not isinstance(state, dict):
+            raise ValueError(f"malformed sync-state file: {self.path}")
+        return state
 
     def get(self, key: str, default: str | None = None) -> str | None:
         return self._load().get(key, default)

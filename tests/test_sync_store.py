@@ -145,3 +145,23 @@ def test_sync_state_watermarks(tmp_path):
     assert s.get("last_run_repo") == "2024-01-01T00:00:00Z"
     s.delete("sync_complete:https://d/")
     assert s.get("sync_complete:https://d/") is None
+
+
+def test_sync_state_unreadable_file_raises_and_keeps_bytes(tmp_path):
+    """A state file that is not a JSON object raises on put instead of
+    being rewritten with only the new key; a missing file is empty."""
+    from doc2vec_spark.store import SyncStateStore
+
+    path = tmp_path / "state.json"
+    s = SyncStateStore(str(path))
+    assert s.get("etag:https://d/a") is None
+    s.put_many({"etag:https://d/a": "1", "etag:https://d/b": "2"})
+    with open(path, "a") as f:
+        f.write("x")
+    corrupt = path.read_bytes()
+    with pytest.raises(ValueError):
+        s.put("etag:https://d/c", "3")
+    assert path.read_bytes() == corrupt
+    path.write_text("[1]")
+    with pytest.raises(ValueError):
+        s.get("etag:https://d/a")
