@@ -35,7 +35,7 @@ JVM, Python, and DuckDB agree bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2vec_spark.embedding import (
@@ -43,88 +43,27 @@ from doc2vec_spark.embedding import (
     MAX_EMBED_CHARS,
     _COMPS_PER_DIGEST,
 )
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
-
-
-def embedding_col(text: Column, dim: int = DEFAULT_DIM) -> Column:
-    """array<float> unit vector as ONE fused fold — native mirror of
-    ``embedding.embed_text``.
-
-    Expression-shape note (the round-9 lesson this module encodes): a naive
-    64-element ``F.array`` of ``conv(substring(md5(...)))`` components plus
-    a separate norm fold LOOKS right but collapses into one Project in
-    which every component re-inlines its block digest and every divide
-    re-inlines the whole norm fold — measured 6x SLOWER than the Arrow UDF.
-    Higher-order functions fix it structurally: the 8 block digests are the
-    elements of ONE array (each md5 evaluated once per row), an
-    ``aggregate`` fold walks them building (components, exact-integer
-    norm^2) in a struct accumulator, and the finish lambda does the
-    correctly-rounded divide + float32 cast over the materialized
-    accumulator VALUE — nothing is re-evaluated, the whole thing is one
-    codegen'd expression, no Python boundary anywhere."""
-    assert dim % _COMPS_PER_DIGEST == 0, "fold accumulates whole digest blocks"
-    t = F.substring(F.coalesce(text, F.lit("")), 1, MAX_EMBED_CHARS)
-    digests = F.array(
-        *[
-            F.md5(F.concat(t, F.lit("#" + str(j))).cast("binary"))
-            for j in range(dim // _COMPS_PER_DIGEST)
-        ]
-    )
-    zero = F.struct(
-        F.array().cast("array<long>").alias("cs"),
-        F.lit(0).cast("long").alias("n"),
-    )
-
-    def merge(acc: Column, d: Column) -> Column:
-        c8 = F.transform(
-            F.sequence(F.lit(0), F.lit(_COMPS_PER_DIGEST - 1)),
-            lambda k: F.conv(d.substr(k * F.lit(4) + F.lit(1), F.lit(4)), 16, 10).cast(
-                "long"
-            )
-            - F.lit(32768),
-        )
-        return F.struct(
-            F.concat(acc["cs"], c8).alias("cs"),
-            (
-                acc["n"]
-                + F.aggregate(c8, F.lit(0).cast("long"), lambda a, c: a + c * c)
-            ).alias("n"),
-        )
-
-    def finish(acc: Column) -> Column:
-        # acc is the evaluated accumulator VALUE: referencing it per element
-        # is a variable read, not a re-evaluation (64 * 32768^2 < 2^53, so
-        # acc.n is the exact integer norm^2)
-        return F.when(
-            acc["n"] == 0,
-            F.transform(acc["cs"], lambda c: F.lit(0.0).cast("float")),
-        ).otherwise(
-            F.transform(
-                acc["cs"],
-                lambda c: (c / F.sqrt(acc["n"].cast("double"))).cast("float"),
-            )
-        )
-
-    return F.aggregate(digests, zero, merge, finish)
+QUERIES, _register = registrar()
 
 
 def _embedding_sql(text_sql: str, dim: int) -> str:
-    """The single-parse SQL form of ``embedding_col`` (r22 batch 8, the
-    vocab-encode batch-5 precedent): ONE parser call instead of the
-    Python-lambda HOF tree rebuilt through dozens of py4j round trips per
-    consumer (~0.33 s of construction each). Character-for-character the
-    same expression tree — every operand, cast and operation order mirrors
-    ``embedding_col`` above, which stays as the reference implementation;
+    """``embedding.embed_text`` as ONE fused SQL fold, parsed once (r22
+    batch 8, the vocab-encode batch-5 precedent) instead of a Python-lambda
+    HOF tree rebuilt through dozens of py4j round trips per consumer
+    (~0.33 s of construction each).
+
+    Expression-shape note (the round-9 lesson): a 64-element array of
+    ``conv(substring(md5(...)))`` components plus a separate norm fold
+    collapses into one Project in which every component re-inlines its
+    block digest and every divide re-inlines the norm fold — measured 6x
+    SLOWER than the Arrow UDF. Here the 8 block digests are the elements of
+    ONE array (each md5 evaluated once per row), an ``aggregate`` fold
+    builds (components, exact-integer norm^2) in a struct accumulator, and
+    the finish lambda does the correctly-rounded divide + float32 cast over
+    the accumulator VALUE. The Column-built twin of this tree lives in
+    ``tests/test_round22_opt.py``, where
     ``test_embedding_sql_bitwise_equals_column_form`` pins bit-parity."""
     assert dim % _COMPS_PER_DIGEST == 0
     t = f"substring(coalesce({text_sql}, ''), 1, {MAX_EMBED_CHARS})"

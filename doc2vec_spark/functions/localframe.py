@@ -78,7 +78,3 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     return spark.sql(
         f"SELECT * FROM (VALUES {vals}) AS t({', '.join(names)})"
     )
-
-
-# batch-6 name, kept for the integer-only call sites
-int_local_frame = local_frame

@@ -176,17 +176,9 @@ def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
 # registry queries (driver-verified multimodal plumbing)
 # ---------------------------------------------------------------------------
 
-from doc2vec_spark.spec import QuerySpec  # noqa: E402
+from doc2vec_spark.spec import registrar  # noqa: E402
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 @_register(

@@ -38,17 +38,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2vec_spark.multimodal import _MEDIA_SQL, media_from_documents
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 FRAME = 64  # samples per analysis frame

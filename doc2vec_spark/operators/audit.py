@@ -42,18 +42,10 @@ from doc2vec_spark.operators.dedup import (
 )
 from doc2vec_spark.operators.dedup import _MINHASH_SIG_SQL
 from doc2vec_spark.operators.normdedup import _NORM_SQL, normalized_text
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 @_register(

@@ -68,17 +68,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2vec_spark.operators.wordpiece import MAX_WORD_CHARS, _corpus_words
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 NUM_MERGES = 8

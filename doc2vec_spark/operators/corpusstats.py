@@ -40,18 +40,10 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 RANKS = 256  # fit over the top-RANKS vocabulary (head of the distribution)
@@ -148,8 +140,8 @@ def ta_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         sxx += x * x
     slope = _tdiv((sx * sy - n * sxy) * 1000, max(n * sxx - sx * sx, 1))
     intercept = _tdiv(sy * 1000 + slope * sx, max(n * 1000, 1))
-    from doc2vec_spark.functions.localframe import int_local_frame
+    from doc2vec_spark.functions.localframe import local_frame
 
-    return int_local_frame(
+    return local_frame(
         spark, [(n, sx, sy, sxy, sxx, slope, intercept)], empty
     )

@@ -50,18 +50,10 @@ from pyspark.sql import functions as F
 from doc2vec_spark.functions.rounding import pround, sql_round
 from doc2vec_spark.functions.vectors import as_double_array, dot, l2_norm
 from doc2vec_spark.operators.similarity import _SRP_BUCKET_SQL, srp_bucket_expr
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 # ---------------------------------------------------------------------------

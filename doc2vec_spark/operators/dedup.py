@@ -29,10 +29,10 @@ from pyspark.sql import functions as F
 from doc2vec_spark.functions import sha256_hex
 from doc2vec_spark.caching import scoped_cache
 from doc2vec_spark.functions.rounding import pround
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
+QUERIES, _register = registrar()
 
 NUM_MINHASH = 12
 BAND_SIZE = 3  # -> 4 bands
@@ -59,14 +59,6 @@ GRID_TARGET_PER_SALT = 1000
 # (sf0.01) / 25 (sf0.1), so results there are unchanged; at 100 TB the cap
 # bounds any shingle's join fanout at 100^2 rows.
 MAX_SHINGLE_DF = 100
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

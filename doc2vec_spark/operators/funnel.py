@@ -39,18 +39,10 @@ from doc2vec_spark.operators.pipeline import QUERIES as _PIPE_QUERIES
 from doc2vec_spark.operators.pipeline import pipe_perplexity_buckets
 from doc2vec_spark.operators.quality import QUERIES as _QUALITY_QUERIES
 from doc2vec_spark.operators.quality import ta_gopher_rules
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 _STAGE_NAMES = ("ingested", "gopher", "dedup", "perplexity")

@@ -61,17 +61,9 @@ from doc2vec_spark.operators.coreset import (
     embeddings_with_norms,
     fps_select,
 )
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 KM_K = 8  # cells — matches CORESET_K so the FPS oracle CTE is reused as-is

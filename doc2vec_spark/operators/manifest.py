@@ -21,18 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 MANIFEST_SHARDS = 8
@@ -108,9 +100,9 @@ def pipe_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_fp = 0
     for v in non_null:
         corpus_fp ^= v
-    from doc2vec_spark.functions.localframe import int_local_frame
+    from doc2vec_spark.functions.localframe import local_frame
 
-    return int_local_frame(
+    return local_frame(
         spark,
         [
             (

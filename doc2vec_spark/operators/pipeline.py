@@ -32,15 +32,16 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from doc2vec_spark.caching import scoped_cache
+from doc2vec_spark.session import scoped_conf
 from doc2vec_spark.operators.dedup import (
     POSTING_BYTES_PER_PARTITION as _POSTING_BYTES_PER_PARTITION,
     corpus_agg_partitions as _corpus_agg_partitions_measured,
     corpus_parquet_bytes as _corpus_parquet_bytes,
 )
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
+QUERIES, _register = registrar()
 
 TRAIN_PCT = 80  # bucket < 80 -> train
 VAL_PCT = 90  # 80 <= bucket < 90 -> val; rest test
@@ -65,14 +66,6 @@ CC_STEPS_PER_ROUND = 2  # full propagate+compress steps fused per materialized j
 # partition ≈ 50-60 MB shuffle blocks, inside executor memory at the target
 # scales.
 STAR_EDGES_PER_PARTITION = 2_000_000
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -574,7 +567,7 @@ def connected_components(
        every edge (u,v), label(u) <= label(v) and vice versa). A graph that
        converges mid-batch is CONFIRMED by the same job — near-clique dup
        corpora finish in one materialization where r8 needed two or three.
-    3. **AQE off inside the loop (restored in finally).** AQE turns every
+    3. **AQE off inside the loop (restored by `scoped_conf`).** AQE turns every
        exchange of every materialization into its own scheduler job — for
        an iterative loop over small already-partitioned label state that
        is pure per-round latency (and the measured stall surface,
@@ -623,22 +616,14 @@ def connected_components(
     # jobs absorb the v-shuffle as one stage INSIDE the job — and a
     # typical near-clique corpus runs exactly one batch, so the edge list
     # shuffles once either way.
-    adaptive = spark.conf.get("spark.sql.adaptive.enabled", None)
+    # ADVICE r9 scoping: scoped_conf restores the true prior state (unset
+    # stays unset) even when a batch job fails.
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if small_input:
-        # r18: static plan for the edge materialization too — tiny
-        # exchanges, nothing for AQE to re-plan, one job instead of six
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # ADVICE r9 scoping (conf capture above the try): capture whether the
-    # conf was EXPLICITLY set — RuntimeConfig.get with a None default
-    # returns None for an unset key — so the finally below restores the
-    # true prior state (unset stays unset) instead of writing a literal
-    # default. The override is still session-visible for the loop's
-    # duration; that is safe here because the engine runs registry queries
-    # sequentially on one session (the _scoped wrapper enforces
-    # one-at-a-time cache scopes) — a caller driving concurrent queries on
-    # this session should clone it with spark.newSession() first.
-    try:
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"):
+        if small_input:
+            # r18: static plan for the edge materialization too — tiny
+            # exchanges, nothing for AQE to re-plan, one job instead of six
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
         n_symp = symp.count()
         # init = the propagate step applied to the identity labeling: min
         # over the closed neighborhood straight from the edge list
@@ -730,12 +715,6 @@ def connected_components(
                 # batch's LAST full step changed nothing => fixed point,
                 # confirmation already fused into this batch's job
                 break
-    finally:
-        if adaptive is None:
-            spark.conf.unset("spark.sql.adaptive.enabled")
-        else:
-            spark.conf.set("spark.sql.adaptive.enabled", adaptive)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     symp.unpersist(False)  # plain cache: lineage survives, recompute possible
     park_blocks(_CC_FAMILY, gen_blocks)  # freed at next CC entry
     if gen_cache is not None:
@@ -813,9 +792,8 @@ def connected_components_star(
     # tiny and the static plan drops the per-exchange scheduler jobs. The
     # init observation hands us the canonical edge COUNT for free — the
     # loop's partition sizing below.
-    adaptive = spark.conf.get("spark.sql.adaptive.enabled", None)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"):
         if small_input:
             spark.conf.set("spark.sql.adaptive.enabled", "false")
         cur, cur_blocks, prev_sig = _observed_ckpt(_canon(edges), "init")
@@ -852,14 +830,6 @@ def connected_components_star(
             if sig == prev_sig:
                 break
             prev_sig = sig
-    finally:
-        # restore the true prior state (unset stays unset — the ADVICE r9
-        # scoping discipline, same as connected_components)
-        if adaptive is None:
-            spark.conf.unset("spark.sql.adaptive.enabled")
-        else:
-            spark.conf.set("spark.sql.adaptive.enabled", adaptive)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     park_blocks(_CC_FAMILY, cur_blocks)  # freed at next CC entry
     sym = _symmetrize(cur)
     return (

@@ -28,18 +28,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from doc2vec_spark.functions.rounding import pround, sql_round
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 # Gopher-style bounds, adapted to the synthetic corpus's scale: the paper

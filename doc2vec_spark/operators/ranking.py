@@ -42,18 +42,10 @@ from doc2vec_spark.functions.vectors import (
 )
 from doc2vec_spark.operators.evalmetrics import NUM_Q, RECALL_K
 from doc2vec_spark.operators.similarity import _SRP_BUCKET_SQL, srp_bucket_expr
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 # integer ppm discount LUT: D[p] = round(1e6 / log2(p+1)), positions 1..k.

@@ -18,18 +18,10 @@ from pyspark.sql.window import Window
 
 from doc2vec_spark.functions import has_extension, md5_uuid, normalize_url, sha256_hex, url_prefix
 from doc2vec_spark.functions.rounding import det_avg, pround, sql_det_avg
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 # ---------------------------------------------------------------------------

@@ -51,18 +51,10 @@ from doc2vec_spark.operators.kmeans import (
     _lloyd_ctes,
     train_kmeans,
 )
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import QuerySpec, registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 SERVE_EXACT_MAX = 10_000  # exact scan at/below; trained-IVF probe above

@@ -30,10 +30,10 @@ from doc2vec_spark.functions.vectors import (
     lit_vector,
 )
 from doc2vec_spark.functions.rounding import pround
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
+QUERIES, _register = registrar()
 
 DIM = 64
 NUM_PLANES = 8
@@ -44,14 +44,6 @@ PLANES: list[list[float]] = [[float(x) for x in _rng.randn(DIM)] for _ in range(
 CENTROIDS: list[list[float]] = [
     [float(x) for x in _rng.randn(DIM)] for _ in range(NUM_CENTROIDS)
 ]
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
 
 
 def _sql_vec(vals: list[float]) -> str:

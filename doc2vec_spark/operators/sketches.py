@@ -21,18 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 CMS_DEPTH = 3  # independent hash rows
@@ -236,9 +228,9 @@ def sk_ams_f2_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "d int, sketch_x long, est_d long, f2_exact long, f2_est long"
         )
     f2_est = int(xs[len(xs) // 2])
-    from doc2vec_spark.functions.localframe import int_local_frame
+    from doc2vec_spark.functions.localframe import local_frame
 
-    return int_local_frame(
+    return local_frame(
         spark,
         [(d, v, v * v, int(f2_exact), f2_est) for d, v in srows],
         "d int, sketch_x long, est_d long, f2_exact long, f2_est long",
@@ -491,14 +483,14 @@ def sk_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero_registers = HLL_M - present
     hll_est = (673 * HLL_M * HLL_M * (1 << _HLL_HASH_BITS)) // (1000 * z40)
     n_exact = orders.select("o_custkey").distinct().count()
-    from doc2vec_spark.functions.localframe import int_local_frame
+    from doc2vec_spark.functions.localframe import local_frame
 
     if not reg_rows:  # empty orders: the oracle's register CTE is empty
         return spark.createDataFrame(
             [],
             "reg long, r_max long, hll_est long, zero_registers long, n_exact long",
         )
-    return int_local_frame(
+    return local_frame(
         spark,
         [
             (reg, r_max, hll_est, zero_registers, n_exact)

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2vec_spark.operators.sketches import HLL_M, _HLL_W_BITS
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
 # register-index shift derived from HLL_M, not hardcoded (review finding
@@ -36,15 +36,7 @@ from doc2vec_spark.tables import load
 _REG_SHIFT = HLL_M.bit_length() - 1
 assert (1 << _REG_SHIFT) == HLL_M, "HLL_M must stay a power of two"
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 # disjoint halves by md5 bucket of the ROW key (o_orderkey), so both halves

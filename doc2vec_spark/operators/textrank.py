@@ -41,18 +41,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2vec_spark.caching import scoped_cache
-from doc2vec_spark.spec import QuerySpec
+from doc2vec_spark.session import scoped_conf
+from doc2vec_spark.spec import registrar
 from doc2vec_spark.tables import load
 
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, oracle: str | None, doc: str = ""):
-    def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, doc=doc)
-        return fn
-
-    return deco
+QUERIES, _register = registrar()
 
 
 PR_SCALE = 1_000_000  # fixed-point rank scale
@@ -180,10 +173,13 @@ def ta_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the invocation scope so the static conf actually covers execution.
     # The conf is restored unconditionally (the ADVICE r9 scoping rule).
     spark = estate.sparkSession
-    adaptive = spark.conf.get("spark.sql.adaptive.enabled", None)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
-    try:
+    with scoped_conf(
+        spark,
+        "spark.sql.adaptive.enabled",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.autoBroadcastJoinThreshold",
+    ):
         from doc2vec_spark.measurement import small_corpus
 
         if small_corpus(sf_dir):
@@ -252,14 +248,4 @@ def ta_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         out = scoped_cache(ranks.orderBy(F.desc("rank"), "tok").limit(PR_TOP_K))
         out.count()  # materialize the bounded result under the static plan
-    finally:
-        if adaptive is None:
-            spark.conf.unset("spark.sql.adaptive.enabled")
-        else:
-            spark.conf.set("spark.sql.adaptive.enabled", adaptive)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_abt is None:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        else:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_abt)
     return out

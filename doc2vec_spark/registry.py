@@ -19,6 +19,7 @@ current spec version.
 from __future__ import annotations
 
 import functools
+import importlib
 
 from doc2vec_spark.spec import QuerySpec
 
@@ -95,113 +96,68 @@ _VERIFIED_R01_FALLBACK: frozenset[str] = frozenset(
 )
 
 
+# Every registering module, under doc2vec_spark. The order is the registry's
+# order, and so the rotation's tiebreak (all_queries): append, never reorder.
+_MODULES = (
+    "operators.relational",
+    "operators.analytics",
+    "operators.anomaly",
+    "operators.budget",
+    "operators.classifier",
+    "operators.sampling",
+    "operators.tpch_extra",
+    "operators.dedup",
+    "operators.textanalysis",
+    "operators.textrank",
+    "operators.tokenizer",
+    "operators.wordpiece",
+    "operators.vocab_encode",
+    "operators.bpe",
+    "operators.trending",
+    "operators.lm",
+    "operators.quality",
+    "operators.sessions",
+    "operators.similarity",
+    "operators.mmr",
+    "operators.evalmetrics",
+    "operators.sketches",
+    "operators.sketchmerge",
+    "operators.normdedup",
+    "operators.windows",
+    "operators.domain",
+    "operators.domaincap",
+    "operators.extensions",
+    "operators.histogram",
+    "operators.linedup",
+    "operators.manifest",
+    "operators.pipeline",
+    "operators.coreset",
+    "operators.kmeans",
+    "operators.serving",
+    "multimodal",
+    "embedding_native",
+    "operators.reference_parity",
+    "operators.asof",
+    "operators.curation",
+    "operators.audit",
+    "operators.ranking",
+    "operators.unigram",
+    "operators.corpusstats",
+    "operators.audiodsp",
+    "operators.funnel",
+    "operators.sq8",
+)
+
+
 def merged_queries() -> dict[str, QuerySpec]:
     # Imports are deferred (so the driver's lightweight entry import stays
     # cheap) but UNCONDITIONAL: every module here is first-party, and a
     # swallowed ImportError would silently shrink queries()/oracle_sql() and
     # with it the driver correctness gate. Optional third-party deps are
     # gated inside the modules themselves, never here.
-    from doc2vec_spark import embedding_native, multimodal
-    from doc2vec_spark.operators import (
-        analytics,
-        anomaly,
-        asof,
-        audiodsp,
-        audit,
-        bpe,
-        budget,
-        classifier,
-        coreset,
-        corpusstats,
-        curation,
-        dedup,
-        domain,
-        domaincap,
-        evalmetrics,
-        extensions,
-        funnel,
-        histogram,
-        kmeans,
-        linedup,
-        manifest,
-        mmr,
-        normdedup,
-        pipeline,
-        lm,
-        quality,
-        ranking,
-        reference_parity,
-        relational,
-        sampling,
-        serving,
-        sessions,
-        similarity,
-        sketches,
-        sq8,
-        sketchmerge,
-        textanalysis,
-        textrank,
-        tokenizer,
-        tpch_extra,
-        trending,
-        unigram,
-        vocab_encode,
-        windows,
-        wordpiece,
-    )
-
-    modules = [
-        relational,
-        analytics,
-        anomaly,
-        budget,
-        classifier,
-        sampling,
-        tpch_extra,
-        dedup,
-        textanalysis,
-        textrank,
-        tokenizer,
-        wordpiece,
-        vocab_encode,
-        bpe,
-        trending,
-        lm,
-        quality,
-        sessions,
-        similarity,
-        mmr,
-        evalmetrics,
-        sketches,
-        sketchmerge,
-        normdedup,
-        windows,
-        domain,
-        domaincap,
-        extensions,
-        histogram,
-        linedup,
-        manifest,
-        pipeline,
-        coreset,
-        kmeans,
-        serving,
-        multimodal,
-        embedding_native,
-        reference_parity,
-        asof,
-        curation,
-        audit,
-        ranking,
-        unigram,
-        corpusstats,
-        audiodsp,
-        funnel,
-        sq8,
-    ]
-
     merged: dict[str, QuerySpec] = {}
-    for mod in modules:
+    for path in _MODULES:
+        mod = importlib.import_module(f"doc2vec_spark.{path}")
         for name, spec in mod.QUERIES.items():
             if name in merged:
                 raise ValueError(f"duplicate query name {name!r}")

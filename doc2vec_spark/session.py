@@ -17,6 +17,8 @@ cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -24,6 +26,27 @@ from pyspark.sql import SparkSession
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, *keys: str) -> Iterator[None]:
+    """Give each of ``keys`` back, on exit, the SQL conf value it had on entry.
+
+    A key that was unset on entry (``RuntimeConfig.get`` with a ``None``
+    default reads it as ``None``) is unset again, so an inherited default
+    never turns into an explicit session setting. The block's own settings
+    are session-visible while it runs; the engine runs registry queries one
+    at a time on a session (``registry._scoped``).
+    """
+    saved = {key: spark.conf.get(key, None) for key in keys}
+    try:
+        yield
+    finally:
+        for key, value in saved.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 # tmpfs scratch is only safe when the expected shuffle/spill volume fits

@@ -19,8 +19,11 @@ an unreadable or non-local path. Such calls run ``train()`` every time and
 store nothing. An empty artifact (empty source) is returned but never
 stored: there is nothing to reuse.
 
-Tiers. (1) An in-process memo, one dict behind a ``threading.Lock``; the
-lock guards only the dict, never ``train()``, so two threads missing on
+Tiers. (1) An in-process memo, one LRU dict of at most MEMO_MAX_ENTRIES
+entries behind a ``threading.Lock`` (the plan-keyed serving index adds one
+entry per distinct frame, so an unbounded memo would grow for as long as an
+engine stays resident); the lock guards only the dict, never ``train()``,
+so two threads missing on
 one key may both train, and both store the same bits (training is
 deterministic: md5-ordered bounded sample, integer fixed-point
 arithmetic). Values are deep-copied on store and on hit, so no caller can
@@ -50,12 +53,14 @@ import hashlib
 import json
 import os
 import threading
+from collections import OrderedDict
 from functools import lru_cache
 from pathlib import Path
 
 CACHE_ENV = "SPARK_GRAFT_TRAIN_CACHE"
 _DEFAULT = Path(__file__).resolve().parent.parent / ".train_cache"
 MAX_ENTRIES = 32  # bounded: oldest-mtime evicted first
+MEMO_MAX_ENTRIES = 64  # in-process memo: least recently used evicted first
 
 # cell ids are packed into the assignment fold as (d6 * 100 + cell) % 100
 # (serving.cell_assignment_col / _d6_int callers), so any id outside
@@ -122,7 +127,7 @@ def cell_id(c) -> int | None:
     return c
 
 
-_MEMO: dict[tuple, object] = {}
+_MEMO: OrderedDict[tuple, object] = OrderedDict()
 _LOCK = threading.Lock()
 
 
@@ -134,6 +139,7 @@ def cached(kind: str, key: tuple | None, train, decode=None):
         return train()
     with _LOCK:
         if (kind, key) in _MEMO:
+            _MEMO.move_to_end((kind, key))
             return copy.deepcopy(_MEMO[(kind, key)])
     disk_key = None if decode is None else key + (module_digest(train.__module__),)
     value = None if disk_key is None else decode(get(kind, disk_key))
@@ -144,6 +150,9 @@ def cached(kind: str, key: tuple | None, train, decode=None):
     if value:
         with _LOCK:
             _MEMO[(kind, key)] = copy.deepcopy(value)
+            _MEMO.move_to_end((kind, key))
+            while len(_MEMO) > MEMO_MAX_ENTRIES:
+                _MEMO.popitem(last=False)
     return value
 
 

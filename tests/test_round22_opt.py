@@ -14,6 +14,7 @@ import re
 
 import pytest
 
+from doc2vec_spark.embedding import DEFAULT_DIM, MAX_EMBED_CHARS, _COMPS_PER_DIGEST
 from doc2vec_spark.operators.coreset import dataset_fingerprint
 
 
@@ -215,11 +216,11 @@ def test_int_local_frame_types_values_and_guards(spark):
     """The VALUES-LocalRelation helper must reproduce createDataFrame's
     schema and values exactly for int/NULL cells, and refuse anything whose
     SQL-literal round-trip is not trivially exact."""
-    from doc2vec_spark.functions.localframe import int_local_frame
+    from doc2vec_spark.functions.localframe import local_frame
 
     rows = [(1, None, -(2**62)), (0, 2**62, 7)]
     schema = "a int, b long, c long"
-    got = int_local_frame(spark, rows, schema)
+    got = local_frame(spark, rows, schema)
     ref = spark.createDataFrame(rows, schema)
     # names + datatypes must match createDataFrame exactly; nullability is
     # allowed to differ (VALUES infers tighter nullability; the driver's
@@ -232,11 +233,11 @@ def test_int_local_frame_types_values_and_guards(spark):
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        int_local_frame(spark, [], schema)
+        local_frame(spark, [], schema)
     with _pytest.raises(TypeError):
-        int_local_frame(spark, [(1.5, 2, 3)], schema)
+        local_frame(spark, [(1.5, 2, 3)], schema)
     with _pytest.raises(TypeError):
-        int_local_frame(spark, [(True, 2, 3)], schema)
+        local_frame(spark, [(True, 2, 3)], schema)
 
 
 def test_local_frame_string_and_double_cells(spark):
@@ -266,6 +267,58 @@ def test_local_frame_string_and_double_cells(spark):
         local_frame(spark, [(b"bytes", 1.0)], "s string, x double")
 
 
+def embedding_col(text, dim: int = DEFAULT_DIM):
+    """The Column-built form of ``embedding_native._embedding_sql``: the same
+    fused md5 fold, operand for operand, built from Python lambdas."""
+    from pyspark.sql import Column
+    from pyspark.sql import functions as F
+
+    assert dim % _COMPS_PER_DIGEST == 0, "fold accumulates whole digest blocks"
+    t = F.substring(F.coalesce(text, F.lit("")), 1, MAX_EMBED_CHARS)
+    digests = F.array(
+        *[
+            F.md5(F.concat(t, F.lit("#" + str(j))).cast("binary"))
+            for j in range(dim // _COMPS_PER_DIGEST)
+        ]
+    )
+    zero = F.struct(
+        F.array().cast("array<long>").alias("cs"),
+        F.lit(0).cast("long").alias("n"),
+    )
+
+    def merge(acc: Column, d: Column) -> Column:
+        c8 = F.transform(
+            F.sequence(F.lit(0), F.lit(_COMPS_PER_DIGEST - 1)),
+            lambda k: F.conv(d.substr(k * F.lit(4) + F.lit(1), F.lit(4)), 16, 10).cast(
+                "long"
+            )
+            - F.lit(32768),
+        )
+        return F.struct(
+            F.concat(acc["cs"], c8).alias("cs"),
+            (
+                acc["n"]
+                + F.aggregate(c8, F.lit(0).cast("long"), lambda a, c: a + c * c)
+            ).alias("n"),
+        )
+
+    def finish(acc: Column) -> Column:
+        # acc is the evaluated accumulator VALUE: referencing it per element
+        # is a variable read, not a re-evaluation (64 * 32768^2 < 2^53, so
+        # acc.n is the exact integer norm^2)
+        return F.when(
+            acc["n"] == 0,
+            F.transform(acc["cs"], lambda c: F.lit(0.0).cast("float")),
+        ).otherwise(
+            F.transform(
+                acc["cs"],
+                lambda c: (c / F.sqrt(acc["n"].cast("double"))).cast("float"),
+            )
+        )
+
+    return F.aggregate(digests, zero, merge, finish)
+
+
 def test_embedding_sql_bitwise_equals_column_form(spark):
     """Batch 8: the single-parse SQL embedding template must stay
     bit-identical to the reference Column-built fold (same digests, casts
@@ -274,7 +327,7 @@ def test_embedding_sql_bitwise_equals_column_form(spark):
 
     from pyspark.sql import functions as F
 
-    from doc2vec_spark.embedding_native import embedding_col, with_embeddings_native
+    from doc2vec_spark.embedding_native import with_embeddings_native
 
     df = spark.createDataFrame(
         [(1, "hello world"), (2, ""), (3, None), (4, "unié中文 #suffix'quote")],

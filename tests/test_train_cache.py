@@ -84,3 +84,25 @@ def test_cached_bypasses_and_skips_empty_artifacts():
     assert len(calls) == 2
     assert train_cache.cached(KIND, ("empty",), lambda: {}) == {}
     assert train_cache._MEMO == before
+
+
+def test_memo_evicts_the_least_recently_used_entry_past_its_cap():
+    """Filling the memo past MEMO_MAX_ENTRIES drops the least recently used
+    key; a key hit just before the overflow survives it."""
+    train_cache.clear()
+    cap = train_cache.MEMO_MAX_ENTRIES
+    for i in range(cap):
+        train_cache.cached(KIND, ("lru", i), lambda i=i: [i])
+
+    def no_train():
+        raise AssertionError("a recently used key was evicted")
+
+    assert train_cache.cached(KIND, ("lru", 0), no_train) == [0]  # now most recent
+    train_cache.cached(KIND, ("lru", cap), lambda: [cap])
+    with train_cache._LOCK:
+        keys = set(train_cache._MEMO)
+    assert len(keys) == cap
+    assert (KIND, ("lru", 1)) not in keys  # the least recently used
+    assert (KIND, ("lru", 0)) in keys and (KIND, ("lru", cap)) in keys
+    assert train_cache.cached(KIND, ("lru", 0), no_train) == [0]
+    train_cache.clear()
