@@ -37,39 +37,21 @@ def _scoped(fn):
 
     return run
 
+
 def _driver_verified_names(merged: dict[str, QuerySpec]) -> frozenset[str]:
     """Names whose driver stamp is valid for the current spec version
-    (spec_hashes.verified_names). Falls back to name-only green rows, then to
-    the static round-1 list, when the stamp/CORRECTNESS files are unreadable
-    (e.g. the package imported outside the repo checkout)."""
-    import json
-    from pathlib import Path
+    (spec_hashes.verified_names). Falls back to name-only green rows
+    (spec_hashes._green_rounds), then to the static round-1 list, when the
+    stamp/CORRECTNESS files are unreadable (e.g. the package imported outside
+    the repo checkout)."""
+    from doc2vec_spark import spec_hashes
 
     try:
-        from doc2vec_spark import spec_hashes
-
         if spec_hashes.load_stamps():
             return spec_hashes.verified_names(merged)
     except Exception:
         pass  # fall through to name-only rotation
-
-    verified: set[str] = set()
-    try:
-        root = Path(__file__).resolve().parent.parent
-        for f in sorted(root.glob("CORRECTNESS_r*.json")):
-            data = json.loads(f.read_text())
-            for name, row in data.items():
-                if (
-                    isinstance(row, dict)
-                    and row.get("rows_match")
-                    and row.get("schema_match")
-                    and row.get("hash_match") is not False  # rows-only checks lack it
-                    and not row.get("err")
-                ):
-                    verified.add(name)
-    except (OSError, ValueError):
-        pass
-    return frozenset(verified) if verified else _VERIFIED_R01_FALLBACK
+    return frozenset(spec_hashes._green_rounds()) or _VERIFIED_R01_FALLBACK
 
 
 # Static fallback: green rows in CORRECTNESS_r01.json (driver-verified round 1).

@@ -7,9 +7,11 @@ operations on a parquet-backed table:
 
 - upsert            = anti-join out the replaced urls, union the new chunks
 - delete_by_url     = left-anti filter (K3)
-- cleanup_obsolete  = left-anti join against the visited-url set (K4/K5) —
-                      the reference's Qdrant scroll pagination loop
-                      (database.ts:576-601) disappears entirely
+
+The K4/K5 obsolete-url cleanup (the reference's Qdrant scroll pagination
+loop, database.ts:576-601) is a column of the sync's per-url decision table
+(``sync.sync_documents`` with ``cleanup_prefix``), committed through
+``apply`` like every other deletion.
 
 Commits are INCREMENTAL and bucketed: rows hash-bucket by url
 (``pmod(xxhash64(url), num_buckets)``), a manifest maps each bucket to the
@@ -277,13 +279,14 @@ class ChunkStore:
         duplicates unrepresentable (database.ts:339-472), and the r16
         dup-PK probe showed duplicated keys fanning silently through 14
         downstream joins/groupings. EVERY ingest passes through apply()
-        (upsert_documents and sync.run_sync alike — enforcing it only in
-        the wrapper would let the main sync path bypass it), so the
+        (upsert_documents and sync.sync_documents alike — enforcing it only
+        in the wrapper would let the main sync path bypass it), so the
         contract is checked here: one batch-sized aggregate over the
         persisted batch, whole-batch rejection, nothing written."""
-        # persist only if the CALLER hasn't (sync.run_sync hands us its own
-        # persisted frame) — unpersisting a borrowed cache would silently
-        # drop the caller's, and re-persisting raises on level mismatch
+        # persist only if the CALLER hasn't: unpersisting a borrowed cache
+        # would silently drop the caller's, and re-persisting raises on
+        # level mismatch. sync.sync_documents hands over an unpersisted
+        # embed batch, so the embedder runs once, under this persist.
         own_persist = new_chunks is not None and not new_chunks.is_cached
         if own_persist:
             new_chunks = new_chunks.persist()
@@ -391,28 +394,11 @@ class ChunkStore:
     def upsert_documents(self, chunks: DataFrame) -> None:
         """K1/K2: replace all chunks of every url present in ``chunks``,
         keep everything else. Key uniqueness is enforced by apply() — the
-        choke point sync.run_sync also passes through."""
+        choke point sync.sync_documents also passes through."""
         self.apply(chunks, None)
 
     def delete_by_urls(self, urls: DataFrame) -> None:
         self.apply(None, urls.select("url"))
-
-    def cleanup_obsolete(self, url_prefix: str, visited_urls: DataFrame) -> int:
-        """K4: delete chunks under ``url_prefix`` whose url was not visited —
-        one left-anti join (database.ts:522-619)."""
-        stored = self.read()
-        in_scope = stored.filter(F.col("url").startswith(url_prefix))
-        # visited/obsolete sets scale with the crawl, not with a dimension
-        # table — leave join strategy to AQE rather than forcing broadcast
-        obsolete_urls = (
-            in_scope.select("url")
-            .distinct()
-            .join(visited_urls.select("url").distinct(), "url", "left_anti")
-        )
-        n = stored.join(obsolete_urls, "url", "left_semi").count()
-        if n:
-            self.apply(None, obsolete_urls)
-        return n
 
 
 class SyncStateStore:

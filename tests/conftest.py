@@ -11,6 +11,17 @@ sys.path.insert(0, str(REPO))
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a dedicated job group; return (result, #jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job-count probe", False)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None, False)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from doc2vec_spark.session import get_spark

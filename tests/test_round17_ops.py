@@ -303,8 +303,8 @@ def test_upsert_rejects_duplicate_chunk_keys(spark, tmp_path):
     with pytest.raises(ValueError, match="duplicate chunk keys"):
         store.upsert_documents(dup)
     assert store.count() == n  # rejected batch ingested NOTHING
-    # the gate lives in apply() itself (r17 review: sync.run_sync commits
-    # through apply, not the upsert wrapper — a wrapper-only gate would
+    # the gate lives in apply() itself (r17 review: sync.sync_documents
+    # commits through apply, not the upsert wrapper — a wrapper-only gate would
     # let the main ingest path bypass the contract)
     with pytest.raises(ValueError, match="duplicate chunk keys"):
         store.apply(dup, None)

@@ -36,19 +36,41 @@ def test_multi_source_store_sync_does_not_cross_delete(spark, tmp_path):
     assert c.items_deleted == 0 and c.chunks_deleted == 0  # counters scoped
 
 
-def test_zero_chunk_doc_purges_stale_chunks_under_prefix(spark, tmp_path):
+@pytest.mark.parametrize(
+    "kw, deleted",
+    [
+        # prefix: the zero-chunk doc and the unvisited url under the prefix
+        ({"cleanup_prefix": "https://d/"}, {"https://d/a", "https://d/b"}),
+        # full listing: every stored url of the product that was not listed
+        ({}, {"https://d/a", "https://d/b", "https://e/c"}),
+        # partial batch: absence is not deletion, only the zero-chunk doc goes
+        ({"full_listing": False}, {"https://d/a"}),
+    ],
+    ids=["prefix", "full_listing", "partial"],
+)
+def test_zero_chunk_doc_purges_stale_chunks_under_prefix(spark, tmp_path, kw, deleted):
     """A doc whose new content chunks to zero rows must lose its stored
-    chunks even when cleanup_prefix scopes deletions."""
+    chunks in every deletion mode; an unlisted url outside the prefix (same
+    product) goes only under a full listing. The counters report exactly the
+    urls and chunks the commit removed."""
     from doc2vec_spark.store import ChunkStore
     from doc2vec_spark.sync import sync_documents
 
     store = ChunkStore(spark, str(tmp_path / "chunks"), num_buckets=4)
-    v1 = _docs(spark, [("https://d/a", f"# A\n{BODY}", "p", "1")])
+    v1 = _docs(
+        spark,
+        [(u, f"# {u}\n{BODY}", "p", "1") for u in ("https://d/a", "https://d/b", "https://e/c")],
+    )
     sync_documents(spark, store, v1)
-    assert store.read().filter(F.col("url") == "https://d/a").count() > 0
+    before = {r["url"]: r["n"] for r in store.read().groupBy("url").agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert set(before) == {"https://d/a", "https://d/b", "https://e/c"}
     v2 = _docs(spark, [("https://d/a", "   ", "p", "1")])  # now empty
-    sync_documents(spark, store, v2, cleanup_prefix="https://d/")
-    assert store.read().filter(F.col("url") == "https://d/a").count() == 0
+    c = sync_documents(spark, store, v2, **kw)
+    after = {r["url"] for r in store.read().select("url").distinct().collect()}
+    assert after == set(before) - deleted
+    assert c.items_deleted == len(deleted)
+    assert c.chunks_deleted == sum(before[u] for u in deleted)
+    assert (c.items_new, c.items_updated, c.chunks_added) == (0, 0, 0)
 
 
 def test_partial_batch_does_not_delete_absent_urls(spark, tmp_path):

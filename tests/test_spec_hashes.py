@@ -118,3 +118,25 @@ def test_registry_wrapper_preserves_fn_module():
             name,
             mod,
         )
+
+
+def test_name_only_rotation_fallback_is_the_green_row_scan(monkeypatch, tmp_path):
+    """With no stamps, the registry's rotation falls back to the names with a
+    green CORRECTNESS row (spec_hashes._green_rounds, the one scan), and to
+    the static round-1 list when no CORRECTNESS file is readable."""
+    from doc2vec_spark import registry, spec_hashes
+
+    monkeypatch.setattr(spec_hashes, "load_stamps", lambda: {})
+    spec_hashes._green_rounds.cache_clear()
+    try:
+        greens = set(spec_hashes._green_rounds())
+        assert greens
+        assert registry._driver_verified_names({}) == greens
+
+        (tmp_path / "CORRECTNESS_r01.json").write_text("{not json")
+        monkeypatch.setattr(spec_hashes, "REPO_ROOT", tmp_path)
+        spec_hashes._green_rounds.cache_clear()
+        assert registry._driver_verified_names({}) == registry._VERIFIED_R01_FALLBACK
+    finally:
+        monkeypatch.undo()
+        spec_hashes._green_rounds.cache_clear()

@@ -11,6 +11,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from tests.conftest import jobs_in_group
+
 
 BODY = "body text for incremental store tests. " * 40
 
@@ -363,17 +365,6 @@ def test_corrupt_manifest_raises_instead_of_wiping_the_store(spark, tmp_path):
     assert _version_dirs(root) == dirs
 
 
-def _jobs_in_group(spark, group, fn):
-    """Run ``fn`` under a dedicated job group; return (result, #jobs)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "job-count probe", False)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None, False)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_snapshot_read_launches_no_job(spark, tmp_path):
     """Resolving a snapshot is driver-side listing under the declared schema:
     read() launches no Spark job however many version directories are live,
@@ -401,7 +392,7 @@ def test_snapshot_read_launches_no_job(spark, tmp_path):
         return engine.query_documentation("doc 5 body").collect()
 
     assert live() == 1
-    rows_1, jobs_1 = _jobs_in_group(spark, "store_read_q1", query)
+    rows_1, jobs_1 = jobs_in_group(spark, "store_read_q1", query)
 
     # single-url upserts into distinct buckets until 3 versions are live
     i = 0
@@ -415,11 +406,11 @@ def test_snapshot_read_launches_no_job(spark, tmp_path):
         i += 1
     assert live() == 3
 
-    frame, read_jobs = _jobs_in_group(spark, "store_read_only", store.read)
+    frame, read_jobs = jobs_in_group(spark, "store_read_only", store.read)
     assert read_jobs == 0, f"store.read() launched {read_jobs} Spark jobs"
     assert frame.schema == STORE_SCHEMA
 
-    rows_3, jobs_3 = _jobs_in_group(spark, "store_read_q3", query)
+    rows_3, jobs_3 = jobs_in_group(spark, "store_read_q3", query)
     assert len(rows_1) == len(rows_3) > 0
     assert jobs_3 == jobs_1, f"query jobs grew with live versions: {jobs_1} -> {jobs_3}"
 

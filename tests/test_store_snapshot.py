@@ -16,7 +16,7 @@ import threading
 
 import pytest
 
-from tests.test_store_incremental import _jobs_in_group
+from tests.conftest import jobs_in_group
 
 
 def _chunks(spark, pages):
@@ -66,7 +66,7 @@ def test_driver_bucket_equals_spark_bucket(spark, tmp_path):
             "url", *(store._bucket_expr(nb).alias(f"b{nb}") for nb in nbs)
         ).collect()
     }
-    got, jobs = _jobs_in_group(
+    got, jobs = jobs_in_group(
         spark,
         "url_bucket_probe",
         lambda: {u: tuple(store._url_bucket(u, nb) for nb in nbs) for u in urls},
@@ -92,7 +92,7 @@ def test_read_memo_reuses_snapshot_and_sees_other_writers(spark, tmp_path, monke
     listings = []
     real = store._read_buckets
     monkeypatch.setattr(store, "_read_buckets", lambda m, b: listings.append(b) or real(m, b))
-    again, jobs = _jobs_in_group(spark, "memo_hit", store.read)
+    again, jobs = jobs_in_group(spark, "memo_hit", store.read)
     assert again is first
     assert jobs == 0 and listings == []
 

@@ -9,6 +9,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from tests.conftest import jobs_in_group
+
 
 def _docs(spark, rows):
     return spark.createDataFrame(
@@ -19,6 +21,10 @@ def _docs(spark, rows):
 BODY_A = "intro text for doc a. " * 40  # > MIN_CHARS so it stands alone
 BODY_B = "details about doc b. " * 40
 BODY_C = "reference for doc c. " * 40
+
+# Spark jobs of a no-op re-sync of one doc: the chunker, the diff table and
+# its one counting aggregate (the same count at 2, 4 and 8 CPUs).
+NOOP_SYNC_JOBS = 7
 
 
 @pytest.fixture()
@@ -100,10 +106,13 @@ def test_unchanged_sync_writes_nothing(spark, store):
     docs = _docs(spark, [("https://d/a", f"# A\n{BODY_A}", "prod", "1.0")])
     sync_documents(spark, store, docs)
     token = store.version_token()
-    c = sync_documents(spark, store, docs)
+    c, jobs = jobs_in_group(
+        spark, "noop_sync", lambda: sync_documents(spark, store, docs)
+    )
     assert c.items_unchanged == 1 and c.chunks_added == 0
     # W3: no embed, no write — the store version did not advance
     assert store.version_token() == token
+    assert jobs <= NOOP_SYNC_JOBS, f"no-op sync launched {jobs} Spark jobs"
 
 
 def test_partial_batch_counters_match_commit(spark, store):
