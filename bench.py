@@ -93,94 +93,18 @@ def detail_file_and_metric(only: str | None) -> tuple[str, str]:
     return "BENCH_DETAIL.json", "headline_queries_total"
 
 
-# Calibration-ceiling ledger gate (VERDICT r14/r15): the fixed environment
-# probe's healthy median on this host is ~0.26-0.30 s; r13's 12.19 s core was
-# cut at ~0.26 while r14/r15 ran inside ~0.32-0.35 windows. A full-registry
-# record cut in a degraded window must not OVERWRITE the canonical
-# BENCH_DETAIL.json / BENCH_ROTATION.json ledgers — it parks verbatim in the
-# sidecar below (nothing is hidden; the stdout contract line still prints),
-# and the rotation ledger does not advance (those queries' timings never
-# entered the canonical record, so they stay due).
-#
-# r18 (VERDICT r17 #3): the ceiling is RELATIVE — CAL_CEILING_FACTOR x the
-# trailing CANONICAL calibration floor (the probe median of the last
-# full-registry run that entered BENCH_DETAIL.json), never below the
-# absolute CAL_CEILING floor. The r17 absolute-only gate parked three honest
-# full runs when the host floor drifted 0.256 -> 0.29-0.32: a permanent
-# host re-provision moved the baseline, and a fixed constant can't follow
-# it. Tying the gate to the last accepted record lets the ceiling track a
-# re-provisioned host within one qualifying run while still rejecting the
-# multi-x co-tenant windows the gate exists for.
-CAL_CEILING = 0.31  # absolute floor of the ceiling / fallback with no record
-CAL_CEILING_FACTOR = 1.25
-# r19 (ADVICE r18 #3): the relative ceiling must not ratchet without bound —
-# each canonical run up to 1.25x the trailing record qualifies and becomes
-# the new floor, so <=25%-per-round co-tenant drift could walk the gate up
-# indefinitely. The absolute cap pins it inside the healthy band (probe
-# 0.26-0.34 across every canonical record to date; the documented co-tenant
-# degradation band starts ~0.4): drift can move the gate 0.31 -> 0.50 at
-# most. A genuine host re-provision slower than this is an explicit
-# SPARK_GRAFT_CAL_CEILING override recorded in COVERAGE, not a silent walk.
-CAL_CEILING_MAX = 0.50
-DEGRADED_SIDECAR = "BENCH_DETAIL_DEGRADED.json"
-
-
-def trailing_canonical_calibration(repo: str | Path | None = None) -> float | None:
-    """Probe median of the last CANONICAL full-registry record
-    (BENCH_DETAIL.json "calibration"), or None when absent/unreadable/
-    empty — degraded-sidecar runs never feed this, so the floor only moves
-    when a run actually qualified."""
-    try:
-        detail = json.loads(
-            (Path(repo if repo is not None else _REPO) / "BENCH_DETAIL.json").read_text()
-        )
-        cal = sorted(float(x) for x in detail.get("calibration", []))
-    except (OSError, ValueError, TypeError):
-        return None
-    if not cal or cal[len(cal) // 2] <= 0:
-        return None
-    return median_of(cal)
-
-
-def cal_ceiling() -> float:
-    """SPARK_GRAFT_CAL_CEILING parsed defensively: an empty or malformed
-    value falls back to the computed ceiling with a warning instead of
-    raising a ValueError AFTER the 30-minute timed run and losing the whole
-    record (round-16 review finding). Without an override the ceiling is
-    max(CAL_CEILING, CAL_CEILING_FACTOR x trailing canonical floor),
-    bounded above by CAL_CEILING_MAX (ADVICE r18 #3: no unbounded
-    ratchet)."""
-    trailing = trailing_canonical_calibration()
-    computed = (
-        CAL_CEILING
-        if trailing is None
-        else min(
-            CAL_CEILING_MAX,
-            max(CAL_CEILING, round(CAL_CEILING_FACTOR * trailing, 3)),
-        )
-    )
-    raw = os.environ.get("SPARK_GRAFT_CAL_CEILING")
-    if raw is None:
-        return computed
-    try:
-        return float(raw)
-    except ValueError:
-        print(
-            f"# WARN: unparseable SPARK_GRAFT_CAL_CEILING={raw!r}; "
-            f"using computed ceiling {computed}",
-            file=sys.stderr,
-        )
-        return computed
-
-
-def is_degraded_window(cal_median: float, ceiling: float | None = None) -> bool:
-    """True when a full-registry run's calibration median exceeds the
-    ceiling: park its detail in DEGRADED_SIDECAR, freeze the ledgers.
-    SPARK_GRAFT_CAL_CEILING overrides (0 disables — e.g. a deliberately
-    loaded rehearsal host)."""
-    if ceiling is None:
-        ceiling = cal_ceiling()
-    return ceiling > 0 and cal_median > ceiling
+def work_counts(tracker, group: str) -> tuple[int, int]:
+    """(jobs, distinct stage ids) that job group ``group`` ran, read from a
+    SparkContext.statusTracker(). Stage ids count once however many jobs
+    share them, skipped stages included: a work figure host load cannot
+    move, recorded beside each wall-clock median."""
+    job_ids = tracker.getJobIdsForGroup(group)
+    stage_ids: set[int] = set()
+    for job_id in job_ids:
+        info = tracker.getJobInfo(job_id)
+        if info is not None:
+            stage_ids.update(info.stageIds)
+    return len(job_ids), len(stage_ids)
 
 
 def is_stall(t: float, lo: float) -> bool:
@@ -320,10 +244,18 @@ def main() -> None:
     # steady — while the reported spread covers the non-stalled reps, with
     # every stalled rep listed verbatim under "stalls" in
     # BENCH_DETAIL.json so nothing is hidden.
+    #
+    # Work beside weather: every rep runs under its own job group, and the
+    # last rep's job and stage counts go into "jobs"/"stages" — figures a
+    # loaded host cannot move, so a median that shifted with its counts
+    # flat is host weather, not code.
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    sc = spark.sparkContext
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     stall_log: dict[str, list[float]] = {}
+    jobs: dict[str, int] = {}
+    stages: dict[str, int] = {}
     for qi, name in enumerate(names):
         if qi and qi % PROBE_EVERY == 0:
             calibration.append(_probe())
@@ -336,13 +268,17 @@ def main() -> None:
                 )
         times: list[float] = []
         n = -1
+        group = ""
 
         def one_rep() -> float:
-            nonlocal n
+            nonlocal n, group
+            group = f"bench:{name}:{len(times)}"
+            sc.setJobGroup(group, name)
             t0 = time.perf_counter()
             df = registry[name].fn(spark, sf_dir)
             n = df.count()
             dt = time.perf_counter() - t0
+            sc.setLocalProperty("spark.jobGroup.id", None)
             spark.catalog.clearCache()
             return dt
 
@@ -354,7 +290,7 @@ def main() -> None:
                 print(
                     f"# STALL {name}: rep {dt:.3f}s > {STALL_FACTOR:.0f}x min "
                     f"{lo:.3f}s (active jobs now: "
-                    f"{len(spark.sparkContext.statusTracker().getActiveJobsIds())})",
+                    f"{len(sc.statusTracker().getActiveJobsIds())})",
                     file=sys.stderr,
                 )
         extra = 0
@@ -368,6 +304,8 @@ def main() -> None:
             time.sleep(SETTLE_BEFORE_EXTRA_S)
             times.append(one_rep())
             extra += 1
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # every job event delivered
+        jobs[name], stages[name] = work_counts(sc.statusTracker(), group)
         times.sort()
         med = median_of(times)
         lo = times[0]
@@ -379,7 +317,8 @@ def main() -> None:
         spreads[name] = round(steady[-1] - lo, 3)
         print(
             f"# {name}: median={timings[name]:.3f}s spread={spreads[name]:.3f}s "
-            f"rows={n} reps={[round(t, 3) for t in times]}"
+            f"rows={n} jobs={jobs[name]} stages={stages[name]} "
+            f"reps={[round(t, 3) for t in times]}"
             + (f" stalls={stall_log[name]}" if stalled else ""),
             file=sys.stderr,
         )
@@ -406,6 +345,8 @@ def main() -> None:
         "n_queries": len(timings),
         "queries": timings,
         "spread": spreads,
+        "jobs": jobs,
+        "stages": stages,
         "stalls": stall_log,
         "reps": reps,
         "calibration": calibration,
@@ -435,27 +376,11 @@ def main() -> None:
         detail.pop("core_headline", None)
     else:
         detail["rotation"] = rotated
-    cal_median = round(median_of(sorted(calibration)), 3)
-    degraded = not only and is_degraded_window(cal_median)
-    if degraded:
-        detail_name = DEGRADED_SIDECAR
-        detail["degraded"] = {
-            "calibration_median": cal_median,
-            "ceiling": cal_ceiling(),
-            "note": "host window degraded; canonical BENCH_DETAIL/ROTATION ledgers frozen",
-        }
-        print(
-            f"# CALIBRATION ceiling: probe median {cal_median:.3f}s > "
-            f"{cal_ceiling():.2f}s — "
-            f"detail parked in {DEGRADED_SIDECAR}; BENCH_DETAIL.json and the "
-            "rotation ledger were NOT overwritten",
-            file=sys.stderr,
-        )
     try:
         (Path(_REPO) / detail_name).write_text(json.dumps(detail, indent=1))
     except OSError as exc:  # never let the side file kill the contract line
         print(f"# {detail_name} write failed: {exc}", file=sys.stderr)
-    if not only and not degraded:
+    if not only:
         # advance the rotation ledger: everything timed this run is marked
         # with the new run counter (committed to git so rounds accumulate)
         run_no = int(ledger.get("run", 0)) + 1

@@ -455,7 +455,7 @@ def ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wash (medians 0.950 uncached vs 0.974 cached, outputs identical) —
     # the batched matmul over the columnar scan is cheaper to run twice
     # than one InMemoryRelation materialization is to fill and read.
-    # bench_runs/ab_knn_cache_scale10.json has the record.
+    # Commit 561d46a holds the raw A/B record.
     b = e.select("vec_id", "v", l2_norm(F.col("v")).alias("nv"), bucket.alias("bucket"))
     a, n = b.alias("a"), b.alias("n")
     sim = dot(F.col("a.v"), F.col("n.v")) / (F.col("a.nv") * F.col("n.nv"))

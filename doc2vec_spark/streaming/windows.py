@@ -49,53 +49,18 @@ def read_events_stream(spark: SparkSession, events_parquet: str) -> DataFrame:
     return raw
 
 
-def _plan_has_aggregate(stream_df: DataFrame) -> bool:
-    """True if the analyzed logical plan contains an Aggregate node.
-
-    Walks the JVM plan tree and checks node CLASS names — a substring test
-    on the plan's toString would also match a column or alias literally
-    named 'Aggregate' (ADVICE r03). Deduplicate / stateful-map nodes are
-    not Aggregates and correctly stay in append mode."""
-    stack = [stream_df._jdf.queryExecution().analyzed()]
-    while stack:
-        node = stack.pop()
-        if node.getClass().getSimpleName() == "Aggregate":
-            return True
-        it = node.children().iterator()
-        while it.hasNext():
-            stack.append(it.next())
-    return False
-
-
-def run_available_now(stream_df: DataFrame, checkpoint: str, query_name: str):
-    """Drain the source with AvailableNow into a memory sink; returns the
-    finished StreamingQuery (read results from table ``query_name``).
-    Output mode follows the PLAN, not isStreaming (always True here):
-    aggregated streams need 'complete' on a memory sink, raw streams need
-    'append' — the old isStreaming test picked 'complete' unconditionally
-    and threw on any non-aggregated stream. If a Spark upgrade renames the
-    plan node out from under the walk, the start() still self-corrects:
-    the wrong mode raises AnalysisException and we flip once."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    mode = "complete" if _plan_has_aggregate(stream_df) else "append"
-
-    def _start(m: str):
-        return (
-            stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(m)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    try:
-        q = _start(mode)
-    except AnalysisException:
-        q = _start("append" if mode == "complete" else "complete")
-    q.awaitTermination()
-    return q
+def _drain(df: DataFrame, name: str, checkpoint: str, mode: str) -> None:
+    """Drain the source with AvailableNow into the memory sink ``name``
+    (read the results back with ``spark.table(name)``)."""
+    (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def tumbling_counts(
@@ -115,15 +80,7 @@ def tumbling_counts(
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("window.start").alias("window_start"), "event_type", "n")
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(agg, name, checkpoint, "complete")
     return spark.table(name)
 
 
@@ -150,15 +107,7 @@ def windowed_topk_stream(
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("window.start").alias("wstart"), "event_type", "n")
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(agg, name, checkpoint, "complete")
     rnk = F.row_number().over(
         Window.partitionBy("wstart").orderBy(F.desc("n"), F.asc("event_type"))
     )
@@ -212,15 +161,7 @@ def hll_users_stream(
         .groupBy(F.window("ts", "6 hours"), "reg")
         .agg(F.max("r").alias("r_max"))
     )
-    q = (
-        regs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(regs, name, checkpoint, "complete")
     return (
         spark.table(name)
         .groupBy("window")
@@ -250,15 +191,7 @@ def streaming_dedup(
     deduped = ev.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(deduped, name, checkpoint, "append")
     return spark.table(name)
 
 
@@ -298,15 +231,7 @@ def running_user_totals(
             update, _OUT_SCHEMA, _STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
         )
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(out, name, checkpoint, "update")
     return spark.table(name)
 
 
@@ -351,15 +276,7 @@ def attribution_stream(
             f"AND purchase_ts <= click_ts + INTERVAL {window_min} MINUTES"
         ),
     ).select("click_id", "purchase_id", F.col("click_user").alias("user_id"))
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(joined, name, checkpoint, "append")
     return spark.table(name)
 
 
@@ -448,15 +365,7 @@ def gap_sessionize_stream(
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(out, name, checkpoint, "update")
     # The memory sink APPENDS update-mode rows rather than upserting, so a
     # replay that runs in >1 batch (multi-file input, maxFilesPerTrigger,
     # restart) leaves stale open-session snapshots from earlier batches in

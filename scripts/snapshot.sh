@@ -30,9 +30,10 @@ python -m pytest tests/ -q
 echo "== [3/4] bench =="
 # SPARK_GRAFT_SNAPSHOT_SKIP_BENCH=1: sanctioned ONLY when a full-registry
 # bench already ran at this exact HEAD earlier in the session (a second
-# 30-minute run adds no information and re-rolls the calibration dice —
-# the r16 calibration-ceiling gate makes re-rolls ledger-safe but still
-# wasteful). The caller asserts that precondition by setting the flag.
+# 30-minute run adds no information: its per-query jobs/stages repeat, and
+# its wall times only re-roll the host weather, while it advances the
+# rotation ledger again). The caller asserts that precondition by setting
+# the flag.
 if [ "${SPARK_GRAFT_SNAPSHOT_SKIP_BENCH:-0}" = "1" ]; then
     echo "skipped: full-registry bench already recorded at this HEAD"
 else

@@ -7,6 +7,8 @@ lists that motivated them, without needing a SparkSession.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import bench
 
 
@@ -109,91 +111,29 @@ def test_rotation_pick_least_recently_benched_first():
     assert bench.rotation_pick(cands, {}, n=3) == ["a", "b", "c"]
 
 
-def _pin_trailing(monkeypatch, tmp_path, cal_list):
-    """Point the ceiling computation at a synthetic canonical record."""
-    import json
+def test_work_counts_reads_one_groups_jobs_and_distinct_stages():
+    """work_counts is the bench's per-query work record: it counts the
+    group's jobs and the distinct stage ids across them (a stage two jobs
+    share counts once), and a job whose info has aged out adds no stage."""
+    class FakeTracker:
+        groups = {"bench:q:2": [7, 8, 9], "bench:q:1": [4, 5]}
+        infos = {
+            4: SimpleNamespace(stageIds=[1, 2]),
+            5: SimpleNamespace(stageIds=[3]),
+            7: SimpleNamespace(stageIds=[10, 11]),
+            8: SimpleNamespace(stageIds=[11, 12]),
+            9: None,
+        }
 
-    if cal_list is not None:
-        (tmp_path / "BENCH_DETAIL.json").write_text(
-            json.dumps({"calibration": cal_list})
-        )
-    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+        def getJobIdsForGroup(self, group):
+            return self.groups.get(group, [])
 
+        def getJobInfo(self, job_id):
+            return self.infos[job_id]
 
-def test_calibration_ceiling_gate(monkeypatch, tmp_path):
-    """VERDICT r14/r15: a full-registry run whose environment probe median
-    exceeds the ceiling must park in the degraded sidecar instead of
-    overwriting the canonical BENCH_DETAIL/ROTATION ledgers."""
-    monkeypatch.delenv("SPARK_GRAFT_CAL_CEILING", raising=False)
-    # no canonical record at all -> absolute fallback
-    _pin_trailing(monkeypatch, tmp_path, None)
-    assert bench.cal_ceiling() == bench.CAL_CEILING
-    assert bench.is_degraded_window(0.32)
-    assert not bench.is_degraded_window(0.31)  # at the ceiling is fine
-    assert not bench.is_degraded_window(0.26)
-    # explicit ceiling argument wins
-    assert bench.is_degraded_window(0.28, ceiling=0.25)
-    # env override, including 0 = disabled (deliberately loaded host)
-    monkeypatch.setenv("SPARK_GRAFT_CAL_CEILING", "0.5")
-    assert not bench.is_degraded_window(0.4)
-    monkeypatch.setenv("SPARK_GRAFT_CAL_CEILING", "0")
-    assert not bench.is_degraded_window(9.9)
-    assert bench.DEGRADED_SIDECAR != bench.detail_file_and_metric(None)[0]
-    # malformed/empty env must fall back to the computed ceiling instead of
-    # raising a ValueError AFTER the 30-minute run and losing the record
-    for bad in ("", "0,31", "abc"):
-        monkeypatch.setenv("SPARK_GRAFT_CAL_CEILING", bad)
-        assert bench.cal_ceiling() == bench.CAL_CEILING
-        assert bench.is_degraded_window(0.32) and not bench.is_degraded_window(0.26)
-
-
-def test_calibration_ceiling_tracks_trailing_canonical_floor(monkeypatch, tmp_path):
-    """VERDICT r17 #3: the ceiling is CAL_CEILING_FACTOR x the probe median
-    of the last canonical record, floored at the absolute CAL_CEILING — a
-    2-5% host-floor drift (r17: 0.256 -> 0.29-0.32) must not park honest
-    full runs for a whole round, while multi-x co-tenant windows still do."""
-    monkeypatch.delenv("SPARK_GRAFT_CAL_CEILING", raising=False)
-    # r17 shape: canonical floor 0.30 -> ceiling 0.375; the 0.32 drift run
-    # that the absolute gate parked now qualifies, a 0.6 window still parks
-    _pin_trailing(monkeypatch, tmp_path, [0.30, 0.30, 0.30])
-    assert bench.cal_ceiling() == 0.375
-    assert not bench.is_degraded_window(0.32)
-    assert bench.is_degraded_window(0.6)
-    # a FAST canonical floor never tightens the gate below the absolute
-    # floor (a lucky 0.20 record must not start parking healthy 0.28 runs)
-    (tmp_path / "BENCH_DETAIL.json").write_text('{"calibration": [0.2, 0.2, 0.2]}')
-    assert bench.cal_ceiling() == bench.CAL_CEILING
-    assert not bench.is_degraded_window(0.28)
-    # unreadable / empty / non-numeric records fall back to the absolute
-    for body in ("{not json", '{"calibration": []}', '{"calibration": ["x"]}'):
-        (tmp_path / "BENCH_DETAIL.json").write_text(body)
-        assert bench.cal_ceiling() == bench.CAL_CEILING
-    # degenerate non-positive medians are rejected, not used
-    (tmp_path / "BENCH_DETAIL.json").write_text('{"calibration": [0.0, 0.0]}')
-    assert bench.cal_ceiling() == bench.CAL_CEILING
-
-
-def test_calibration_ceiling_capped_against_ratchet(monkeypatch, tmp_path):
-    """ADVICE r18 #3: the relative ceiling must not ratchet without bound.
-    Each canonical run up to 1.25x the trailing record qualifies and
-    becomes the new floor, so <=25%-per-round co-tenant drift could walk
-    the gate up indefinitely; CAL_CEILING_MAX pins it. A slower genuine
-    re-provision is an explicit env override, not a silent walk."""
-    monkeypatch.delenv("SPARK_GRAFT_CAL_CEILING", raising=False)
-    # a drifted-but-accepted 0.48 record would compute 0.6 uncapped
-    _pin_trailing(monkeypatch, tmp_path, [0.48, 0.48, 0.48])
-    assert bench.cal_ceiling() == bench.CAL_CEILING_MAX
-    assert bench.is_degraded_window(0.55)
-    # simulate the unbounded walk: every next record 1.24x the last —
-    # the capped ceiling converges instead of growing round over round
-    cal = 0.31
-    for _ in range(10):
-        cal = round(1.24 * cal, 3)
-        _pin_trailing(monkeypatch, tmp_path, [cal] * 3)
-        assert bench.cal_ceiling() <= bench.CAL_CEILING_MAX
-    # records inside the healthy band are unaffected by the cap
-    _pin_trailing(monkeypatch, tmp_path, [0.30, 0.30, 0.30])
-    assert bench.cal_ceiling() == 0.375
-    # the explicit override still wins above the cap (re-provisioned host)
-    monkeypatch.setenv("SPARK_GRAFT_CAL_CEILING", "0.8")
-    assert bench.cal_ceiling() == 0.8
+    tracker = FakeTracker()
+    # jobs 7 and 8 share stage 11; job 9's info is gone; group 1's jobs
+    # and stages do not leak in
+    assert bench.work_counts(tracker, "bench:q:2") == (3, 3)
+    assert bench.work_counts(tracker, "bench:q:1") == (2, 3)
+    assert bench.work_counts(tracker, "other") == (0, 0)

@@ -135,18 +135,6 @@ def test_watermark_drops_late_data_across_batches(spark, tmp_path):
     assert rows.get(ten) == 3, f"late event leaked into closed window: {rows}"
 
 
-def test_plan_has_aggregate_checks_node_classes_not_names(spark):
-    """ADVICE r03: a column literally named 'Aggregate' must not flip the
-    memory-sink output mode — detection walks plan node classes."""
-    from pyspark.sql import functions as F
-
-    from doc2vec_spark.streaming.windows import _plan_has_aggregate
-
-    df = spark.range(5).select(F.col("id").alias("Aggregate"))
-    assert not _plan_has_aggregate(df)
-    assert _plan_has_aggregate(df.groupBy("Aggregate").count())
-
-
 def test_stateful_sessionization_matches_batch(spark, tmp_path):
     """gap_sessionize_stream on a complete AvailableNow replay must emit
     exactly the batch ev_sessionize rows (same gap, stats, ordering)."""
