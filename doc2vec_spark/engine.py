@@ -122,12 +122,12 @@ class Doc2VecSparkEngine:
     def query_documentation(self, query_text: str, **kwargs) -> DataFrame:
         from doc2vec_spark.query import query_documentation
 
-        return query_documentation(self.store.read(), query_text, **kwargs)
+        return query_documentation(self.store.serving(), query_text, **kwargs)
 
     def query_code(self, query_text: str, **kwargs) -> DataFrame:
         from doc2vec_spark.query import query_code
 
-        return query_code(self.store.read(), query_text, **kwargs)
+        return query_code(self.store.serving(), query_text, **kwargs)
 
     def get_chunks(self, url: str, start: int | None = None, end: int | None = None) -> DataFrame:
         from doc2vec_spark.query import get_chunks

@@ -31,18 +31,26 @@ def l2_norm(a: Column) -> Column:
 
 def cosine_distance(a: Column, b: Column) -> Column:
     """1 - cos(a, b); ascending = closer, matching sqlite-vec MATCH distance
-    ordering (the engine-standard convention, SURVEY E3)."""
-    return F.lit(1.0) - dot(a, b) / (l2_norm(a) * l2_norm(b))
+    ordering (the engine-standard convention, SURVEY E3). A zero-norm
+    vector has no direction: its distance is NULL, with ANSI mode on or off
+    (a plain ``/`` raises DIVIDE_BY_ZERO under ANSI)."""
+    return F.lit(1.0) - F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
-def cosine_distance_lit(a: Column, qvec: Sequence[float]) -> Column:
+def cosine_distance_lit(
+    a: Column, qvec: Sequence[float], norm: Column | None = None
+) -> Column:
     """``cosine_distance(a, lit_vector(qvec))`` with the query's norm baked
     as a Python constant (r21, guide §1.2 per-task work): the literal
     query's norm fold is loop-invariant yet was re-evaluated per row as an
     interpreted HOF. The constant replays the identical arithmetic — the
     same 0.0-seeded left fold over the same doubles and a correctly-rounded
     IEEE sqrt — and the term order (``l2_norm(a) * qn``) is unchanged, so
-    every emitted double is bit-identical to the inline form."""
+    every emitted double is bit-identical to the inline form.
+
+    ``norm``, when given, is a column already holding ``l2_norm(a)`` (the
+    chunk store's serving frame stores it) and stands in for the per-row
+    fold, in the same place, so the distances stay bit-identical."""
     import math
 
     q = [float(v) for v in qvec]
@@ -50,7 +58,8 @@ def cosine_distance_lit(a: Column, qvec: Sequence[float]) -> Column:
     for x in q:
         acc += x * x
     qn = math.sqrt(acc)
-    return F.lit(1.0) - dot(a, lit_vector(q)) / (l2_norm(a) * F.lit(qn))
+    an = l2_norm(a) if norm is None else norm
+    return F.lit(1.0) - F.try_divide(dot(a, lit_vector(q)), an * F.lit(qn))
 
 
 def lit_vector(values: Sequence[float]) -> Column:

@@ -6,7 +6,10 @@
   exact cosine top-k (T1). Unlike the reference, post-filters are pushed
   BELOW the top-k, so the 3x over-fetch dance (mcp/src/server.ts:134-135)
   is unnecessary — Catalyst prunes columns (P8) and the ordered limit
-  compiles to TakeOrderedAndProject.
+  compiles to TakeOrderedAndProject. A ``norm`` column on the input (the
+  chunk store's ``serving()`` frame stores it) is taken as each row's
+  embedding L2 norm in place of the per-row fold, and is dropped from the
+  output like ``embedding``.
 - get_chunks: exact (url [, chunk_index range]) scan ordered by index (T3).
 - reconstruct_page: ordered concat of a url's chunks (T4, README.md:85-103).
 """
@@ -46,7 +49,8 @@ def query_documentation(
     if extensions:
         df = df.filter(has_extension(F.col("url"), list(extensions)))
     df = df.filter(F.trim(F.col("content")) != "")
-    dist = cosine_distance_lit(as_double_array(F.col("embedding")), qvec)
+    norm = F.col("norm") if "norm" in df.columns else None
+    dist = cosine_distance_lit(as_double_array(F.col("embedding")), qvec, norm)
     # Fully deterministic top-k: chunk_id is a content hash, so a corpus of
     # duplicated content ties at identical (distance, chunk_id) and the cut
     # would pick arbitrary urls (blanktext sweep, r16) — url + chunk_index
@@ -54,7 +58,7 @@ def query_documentation(
     # well-defined under ties on every input.
     return (
         df.withColumn("distance", dist)
-        .drop("embedding")  # P8: never ship the heavy column to the driver
+        .drop("embedding", "norm")  # P8: never ship the heavy column to the driver
         .orderBy(
             F.asc("distance"), F.asc("chunk_id"), F.asc("url"), F.asc("chunk_index")
         )

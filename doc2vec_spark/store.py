@@ -58,6 +58,29 @@ listing and the union of version scans are reused while the token is
 unchanged. The memo cannot outlive its files: it is replaced as soon as the
 manifest moves, and GC keeps a superseded version one commit longer.
 
+Top-k queries read ``serving()``: that same snapshot with ``embedding``
+cast to ``array<double>`` and each row's ``norm`` stored as a column, computed
+by ``functions.vectors.l2_norm`` (the left fold a query would otherwise run
+per row). It is ``persist()``ed at the DataFrame default storage level
+(memory, spilling to disk), so its size needs no bound. It is built at most
+once per token, on the first ``serving()`` after the token moves, and filled
+by the first query that runs on it. It lives in the same memo as the
+``read()`` frame, as ``(token, frame, serving)``: when the memo is replaced
+because the token moved, the old serving frame is unpersisted, and a store
+that is garbage-collected unpersists its last one. ``read()`` never returns
+the cached frame, so a sync's diff and commit scan files as before. Builds
+serialize on a lock per store, because Spark's CacheManager keys cached data
+by plan: a second ``persist`` of the same token's plan would register
+nothing, and unpersisting that copy would drop the first. A build whose memo
+a newer ``read()`` replaced meanwhile unpersists its own copy.
+
+Plan matching is also why the cache is safe to share: any query whose plan
+contains the serving plan reads the cached rows. A version directory is
+written once, under a uuid-suffixed name, and never rewritten, so a plan that
+matches names the same files holding the same rows. ``read()``'s plan is the
+bare scan beneath the serving projection and never matches it, so nothing
+built on ``read()`` is served from the cache.
+
 A url's rows all live in one bucket, so ``read_url`` reads only that
 bucket: the bucket id is Spark's own ``xxhash64`` computed on the driver
 over py4j (no Spark job), taken ``pmod`` the manifest's bucket count.
@@ -73,6 +96,7 @@ import os
 import shutil
 import threading
 import uuid
+import weakref
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,6 +104,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from doc2vec_spark.chunking import CHUNK_SCHEMA
+from doc2vec_spark.functions.vectors import as_double_array, l2_norm
 
 EMBED_FIELD = "embedding"
 DEFAULT_NUM_BUCKETS = 16
@@ -109,16 +134,34 @@ def _token(manifest: dict) -> tuple:
     return (manifest["counter"], tuple(sorted(manifest["buckets"].items())))
 
 
+def _serving_of(frame: DataFrame) -> DataFrame:
+    """``frame`` with ``embedding`` as ``array<double>`` and its ``norm``."""
+    return frame.withColumn(EMBED_FIELD, as_double_array(F.col(EMBED_FIELD))).withColumn(
+        "norm", l2_norm(F.col(EMBED_FIELD))
+    )
+
+
+def _release(memo: list) -> None:
+    """Unpersist the serving frame of a collected store's memo."""
+    if memo[0] is not None and memo[0][2] is not None:
+        memo[0][2].unpersist()
+
+
 class ChunkStore:
     def __init__(self, spark: SparkSession, path: str, num_buckets: int = DEFAULT_NUM_BUCKETS):
         self.spark = spark
         self.path = path.rstrip("/")
         self.num_buckets = num_buckets
         os.makedirs(self.path, exist_ok=True)
-        # (token, frame) of the last snapshot read() resolved; the lock
-        # guards the pair and is never held across a Spark call
-        self._snapshot: tuple[tuple, DataFrame] | None = None
+        # one slot: (token, frame, serving) of the last snapshot read()
+        # resolved, serving None until serving() builds it. _snapshot_lock
+        # guards the slot and is never held across a Spark call;
+        # _serving_lock serializes serving-frame builds (persist/unpersist,
+        # which launch no job)
+        self._memo: list[tuple[tuple, DataFrame, DataFrame | None] | None] = [None]
         self._snapshot_lock = threading.Lock()
+        self._serving_lock = threading.Lock()
+        weakref.finalize(self, _release, self._memo).atexit = False
         self._xxh64 = None  # (XXH64(42) over py4j, byte[] base offset)
 
     # -- manifest machinery --------------------------------------------------
@@ -231,14 +274,45 @@ class ChunkStore:
         returned frame itself, which other callers share: derive from it."""
         manifest = self._manifest()
         token = _token(manifest)
-        with self._snapshot_lock:
-            memo = self._snapshot
+        memo = self._memo_now()
         if memo is not None and memo[0] == token:
             return memo[1]
         frame = self._read_buckets(manifest, sorted(int(k) for k in manifest["buckets"]))
-        with self._snapshot_lock:
-            self._snapshot = (token, frame)
+        self._swap(memo, (token, frame, None))
         return frame
+
+    def serving(self) -> DataFrame:
+        """``read()``'s snapshot with ``embedding`` as ``array<double>`` and
+        a ``norm`` column (its L2 norm), persisted once per manifest token
+        (see the module docstring for its lifetime). For top-k queries;
+        like ``read()``'s frame it is shared, so derive from it."""
+        frame = self.read()
+        with self._serving_lock:
+            memo = self._memo_now()
+            if memo[1] is not frame:
+                # a newer read() replaced the memo since: serve this one uncached
+                return _serving_of(frame)
+            if memo[2] is not None:
+                return memo[2]
+            serving = _serving_of(frame).persist()
+            if not self._swap(memo, (memo[0], frame, serving)):
+                serving.unpersist()
+            return serving
+
+    def _memo_now(self):
+        with self._snapshot_lock:
+            return self._memo[0]
+
+    def _swap(self, old, new) -> bool:
+        """Replace the memo by ``new`` if it is still ``old``. A serving
+        frame that leaves the memo is unpersisted."""
+        with self._snapshot_lock:
+            if self._memo[0] is not old:
+                return False
+            self._memo[0] = new
+        if old is not None and old[2] is not None:
+            old[2].unpersist()
+        return True
 
     def read_url(self, url: str) -> DataFrame:
         """The current snapshot's rows for ``url`` (``STORE_SCHEMA``), read
@@ -340,8 +414,15 @@ class ChunkStore:
             # through `touched`, far beyond broadcast scale at the store's
             # target size — AQE picks broadcast itself whenever the set is
             # actually small
-            kept = self._read_buckets(manifest, affected).join(
-                touched, "url", "left_anti"
+            # a left join + null filter, not a left-anti join: Catalyst
+            # pushes an anti join below the union of version scans, one join
+            # (three jobs) per live version the buckets span; `touched` is
+            # distinct, so the outer join keeps each row at most once
+            kept = (
+                self._read_buckets(manifest, affected)
+                .join(touched.withColumn("_touched", F.lit(True)), "url", "left")
+                .filter(F.col("_touched").isNull())
+                .drop("_touched")
             )
             out = kept if new_chunks is None else kept.unionByName(new_chunks)
             self._commit(manifest, out, nb, affected)

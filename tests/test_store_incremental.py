@@ -443,3 +443,47 @@ def test_numeric_looking_product_name_round_trips_as_string(spark, tmp_path):
     assert counters.items_new == counters.items_updated == counters.items_deleted == 0
     assert counters.chunks_added == counters.chunks_deleted == 0, counters
     assert store.version_token() == token
+
+
+def test_commit_write_jobs_do_not_grow_with_live_versions(spark, tmp_path, monkeypatch):
+    """A commit's write runs the same number of jobs whether the touched
+    buckets live in one version directory or in three: the kept rows'
+    join runs once over the union of version scans, not once per version."""
+    import hashlib
+
+    from doc2vec_spark.store import STORE_SCHEMA, ChunkStore
+
+    def rows(urls, tag):
+        out = []
+        for u in urls:
+            for i in range(3):
+                c = f"{u} chunk {i} {tag}"
+                h = hashlib.sha256(c.encode()).hexdigest()
+                out.append((u, "prod", "1.0", "", "", [u], "", h, c, h, i, 3, [float(i + 1)] * 8))
+        return spark.createDataFrame(out, STORE_SCHEMA)
+
+    store = ChunkStore(spark, str(tmp_path / "chunks"), num_buckets=8)
+    writes = []
+    real = store._commit
+
+    def counted(manifest, out, nb, buckets):
+        versions = len({manifest["buckets"].get(str(b)) for b in buckets} - {None})
+        _, jobs = jobs_in_group(
+            spark, f"commit_write_{len(writes)}", lambda: real(manifest, out, nb, buckets)
+        )
+        writes.append((versions, jobs))
+
+    urls = [f"https://d/{i}" for i in range(120)]
+    store.apply(rows(urls, "v0"), None)
+    monkeypatch.setattr(store, "_commit", counted)
+    live = list(urls)
+    for c in range(1, 4):
+        dels = live[60 + c * 5: 60 + c * 5 + 2]
+        live = [u for u in live if u not in dels]
+        store.apply(
+            rows(live[c * 7: c * 7 + 3], f"v{c}"),
+            spark.createDataFrame([(u,) for u in dels], "url string"),
+        )
+    assert store.count() == 3 * len(live)
+    assert writes[0][0] == 1 and max(v for v, _ in writes) >= 3, writes
+    assert len({jobs for _, jobs in writes}) == 1, writes

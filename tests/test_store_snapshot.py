@@ -1,14 +1,18 @@
-"""Snapshot reuse and bucket-pruned url reads in the chunk store.
+"""Snapshot reuse, the serving frame and bucket-pruned url reads in the
+chunk store.
 
 ``ChunkStore.read()`` keeps the snapshot it resolved last, keyed by the
-manifest token, and ``read_url`` reads one url from its one bucket. These
+manifest token, ``serving()`` keeps that snapshot persisted with a stored
+norm for top-k, and ``read_url`` reads one url from its one bucket. These
 tests pin the driver-side bucket id to Spark's, the memo's visibility and
-corruption contract, lookup equality with the full-snapshot path, and
+corruption contract, top-k over the serving frame against the scan, the
+serving frame's release, lookup equality with the full-snapshot path, and
 readers racing a commit on one session.
 """
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import os
 import sys
@@ -19,21 +23,27 @@ import pytest
 from tests.conftest import jobs_in_group
 
 
-def _chunks(spark, pages):
+def _chunks(spark, pages, repo="", vectors=None):
     """Hand-built store rows: each page is a list of chunk contents, each
-    embedded with the engine's own ``embed_text``."""
+    embedded with the engine's own ``embed_text`` unless ``vectors`` maps
+    the content to its vector."""
     from doc2vec_spark.embedding import embed_text
     from doc2vec_spark.store import STORE_SCHEMA
 
+    vectors = vectors or {}
     rows = []
     for url, parts in pages.items():
         for i, content in enumerate(parts):
             h = hashlib.sha256(content.encode()).hexdigest()
-            vec = [float(x) for x in embed_text(content)]
+            vec = vectors.get(content) or [float(x) for x in embed_text(content)]
             rows.append(
-                (url, "prod", "1.0", "", "", [url], "", h, content, h, i, len(parts), vec)
+                (url, "prod", "1.0", "", repo, [url], "", h, content, h, i, len(parts), vec)
             )
     return spark.createDataFrame(rows, STORE_SCHEMA)
+
+
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def _pages(n, tag=""):
@@ -109,6 +119,106 @@ def test_read_memo_reuses_snapshot_and_sees_other_writers(spark, tmp_path, monke
         store.read()
 
 
+def _top_k(df):
+    """(url, chunk_index, chunk_id, distance) per row, the distance as the
+    hex of its double so equality is bit for bit."""
+    return [
+        (r["url"], r["chunk_index"], r["chunk_id"], None if r["distance"] is None else r["distance"].hex())
+        for r in df.collect()
+    ]
+
+
+def test_serving_top_k_is_bit_identical_to_the_scan(spark, tmp_path):
+    """Top-k over the serving frame returns the rows and distances of
+    ``query.query_documentation`` / ``query_code`` over ``read()``, each
+    distance the same double: plain, url_prefix, extensions and code
+    variants, on a store with an all-zero embedding (NULL distance on both
+    paths) and a blank-content chunk. A never-committed store returns no
+    rows."""
+    from doc2vec_spark import query
+    from doc2vec_spark.embedding import DEFAULT_DIM
+    from doc2vec_spark.engine import Doc2VecSparkEngine
+
+    empty = Doc2VecSparkEngine(spark, str(tmp_path / "empty"))
+    assert empty.query_documentation("anything").collect() == []
+    assert empty.query_code("anything", repo="o/r").collect() == []
+
+    engine = Doc2VecSparkEngine(spark, str(tmp_path / "eng"))
+    store = engine.store
+    docs = {
+        f"https://d/guide/{i}{ext}": [f"guide {i} part {s} {ext}" for s in range(3)]
+        for i, ext in enumerate([".md", ".markdown"] * 3)
+    }
+    docs["https://d/blank.md"] = ["blank neighbour", "   "]
+    code = {
+        "https://d/src/a.py": ["def parse args", "zero"],
+        "https://d/src/b.py": ["def main loop"],
+    }
+    store.upsert_documents(
+        _chunks(spark, docs).unionByName(
+            _chunks(spark, code, repo="o/r", vectors={"zero": [0.0] * DEFAULT_DIM})
+        )
+    )
+    assert "norm" in store.serving().columns
+
+    variants = [
+        ("plain", {}),
+        ("prefix", {"url_prefix": "https://d/guide/"}),
+        ("ext", {"extensions": [".markdown"]}),
+        ("code", {"repo": "o/r"}),
+    ]
+    blank = hashlib.sha256(b"   ").hexdigest()
+    saw_null = False
+    for text in ("guide 3 part 1", "parse args", "blank"):
+        for variant, kw in variants:
+            if variant == "code":
+                got = _top_k(engine.query_code(text, k=5, **kw))
+                want = _top_k(query.query_code(store.read(), text, k=5, **kw))
+            else:
+                got = _top_k(engine.query_documentation(text, k=5, **kw))
+                want = _top_k(query.query_documentation(store.read(), text, k=5, **kw))
+            assert got == want, (text, variant)
+            assert len(got) == (3 if variant == "code" else 5), (text, variant)
+            assert blank not in {row[2] for row in got}
+            saw_null |= any(row[3] is None for row in got)
+    assert saw_null
+
+
+def test_serving_frame_is_released_when_the_token_moves(spark, tmp_path):
+    """10 commits, each followed by 3 queries, leave at most one more
+    persistent RDD than before. A commit through a second ChunkStore on the
+    path shows in the first store's next query, which releases the old
+    serving frame; a store that is collected releases its last one."""
+    from pyspark import StorageLevel
+
+    from doc2vec_spark.engine import Doc2VecSparkEngine
+    from doc2vec_spark.store import ChunkStore
+
+    gc.collect()
+    base = _persisted(spark)
+    engine = Doc2VecSparkEngine(spark, str(tmp_path / "eng"))
+    store = engine.store
+    for c in range(10):
+        store.upsert_documents(_chunks(spark, {f"https://d/{c}": [f"page {c} part {s}" for s in range(2)]}))
+        for q in range(3):
+            rows = engine.query_documentation(f"page {c} q{q}", url_prefix=f"https://d/{c}").collect()
+            assert [r["url"] for r in rows] == [f"https://d/{c}"] * 2, (c, q)
+    assert _persisted(spark) <= base + 1
+
+    held = store.serving()
+    assert held.storageLevel != StorageLevel.NONE
+    other = ChunkStore(spark, store.path)
+    other.upsert_documents(_chunks(spark, {"https://d/zebra": ["zebra stripes"]}))
+    rows = engine.query_documentation("zebra", url_prefix="https://d/zebra").collect()
+    assert [r["url"] for r in rows] == ["https://d/zebra"]
+    assert held.storageLevel == StorageLevel.NONE
+    assert _persisted(spark) <= base + 1
+
+    del engine, store, other
+    gc.collect()
+    assert _persisted(spark) <= base
+
+
 def _full_path(store):
     """Every url's chunks, ranged chunks and page, from two actions over
     the full snapshot."""
@@ -159,9 +269,10 @@ def test_pruned_lookups_equal_full_snapshot(spark, tmp_path):
 
 
 def test_readers_racing_a_commit_see_one_snapshot(spark, tmp_path):
-    """8 threads query and look up while one thread commits: no call
-    raises, each result equals the serial answer on the snapshot before or
-    after the commit, and a call that starts after the commit sees it."""
+    """8 threads query (rows and distances) and look up while one thread
+    commits: no call raises, each result equals the serial answer on the
+    snapshot before or after the commit, and a call that starts after the
+    commit sees it."""
     from doc2vec_spark.engine import Doc2VecSparkEngine
 
     engine = Doc2VecSparkEngine(spark, str(tmp_path / "eng"))
@@ -180,7 +291,7 @@ def test_readers_racing_a_commit_see_one_snapshot(spark, tmp_path):
         kind, arg = op
         if kind == "query":
             rows = engine.query_documentation(arg, k=3).collect()
-            return [(r["url"], r["chunk_index"], r["content"]) for r in rows]
+            return [(r["url"], r["chunk_index"], r["content"], r["distance"]) for r in rows]
         if kind == "chunks":
             return [(r["chunk_index"], r["content"]) for r in engine.get_chunks(arg).collect()]
         return engine.reconstruct_page(arg)
